@@ -122,6 +122,21 @@ def halfup_ratio_wide_sql(
     )
 
 
+def halfup_expr(num: str, den: str, digits: int) -> Column:
+    """`halfup_ratio_sql` as a Spark column."""
+    return F.expr(halfup_ratio_sql(num, den, digits, engine="spark"))
+
+
+def halfup_wide_expr(num: str, den: str, digits: int) -> Column:
+    """`halfup_ratio_wide_sql` as a Spark column."""
+    return F.expr(halfup_ratio_wide_sql(num, den, digits, engine="spark"))
+
+
+def halfup_duck(num: str, den: str, digits: int) -> str:
+    """`halfup_ratio_sql` as DuckDB text, for oracles."""
+    return halfup_ratio_sql(num, den, digits, engine="duck")
+
+
 def halfup_div_wide_sql(num: str, den: str, engine: str = "spark") -> str:
     """INTEGER half-up of `num/den` (BIGINT result, no display
     divide) with 128-bit intermediates — for callers that go on to

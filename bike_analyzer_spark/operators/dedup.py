@@ -603,10 +603,6 @@ def dedup_incr_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# dedup_incr_near FIRST: registration order feeds the driver's
-# 50-query correctness window, and when this module straddles the
-# boundary its unproven query must be the one inside (see
-# tests/test_rotation.py)
 QUERIES = {
     "dedup_incr_near": dedup_incr_near,
     "dedup_exact": dedup_exact,

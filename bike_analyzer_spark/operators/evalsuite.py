@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.exact import halfup_ratio_sql
+from ..functions.exact import halfup_duck, halfup_expr, halfup_ratio_sql
 from ..sources.catalog import load
 from . import classifier, dedup, ivf, similarity
 from .dedup import (
@@ -41,14 +41,6 @@ from .dedup import (
     minhash_signatures,
 )
 from .similarity import N_QUERIES, TOP_K
-
-
-def _halfup(num: str, den: str, digits: int) -> F.Column:
-    return F.expr(halfup_ratio_sql(num, den, digits, engine="spark"))
-
-
-def _hd(num: str, den: str, digits: int) -> str:
-    return halfup_ratio_sql(num, den, digits, engine="duck")
 
 
 # ----------------------------------------------------- ANN recall
@@ -92,7 +84,7 @@ def ann_recall_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return hits.select(
         "query_id",
         "n_hits",
-        _halfup("n_hits * 100", str(TOP_K), 2).alias("recall_pct"),
+        halfup_expr("n_hits * 100", str(TOP_K), 2).alias("recall_pct"),
     ).orderBy("query_id")
 
 
@@ -179,7 +171,7 @@ def ann_probe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_probe",
             "covered",
             "n_true",
-            _halfup("covered * 100", "n_true", 2).alias("coverage_pct"),
+            halfup_expr("covered * 100", "n_true", 2).alias("coverage_pct"),
         )
         .orderBy("n_probe")
     )
@@ -211,7 +203,7 @@ def nbq_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
             "keep_rule",
             "keep_nb",
             "n_docs",
-            _halfup("n_docs * 100", "_total", 4).alias("share_pct"),
+            halfup_expr("n_docs * 100", "_total", 4).alias("share_pct"),
         )
         .orderBy("keep_rule", "keep_nb")
     )
@@ -351,7 +343,7 @@ ORACLES = {
         ),
         curve AS ({_PROBE_UNION})
         SELECT n_probe, covered, n_true,
-               {_hd("covered * 100", "n_true", 2)} AS coverage_pct
+               {halfup_duck("covered * 100", "n_true", 2)} AS coverage_pct
         FROM curve ORDER BY n_probe
     """,
     "ann_recall_ivf": f"""
@@ -369,7 +361,7 @@ ORACLES = {
             GROUP BY b.query_id
         )
         SELECT query_id, n_hits,
-               {_hd("n_hits * 100", str(TOP_K), 2)} AS recall_pct
+               {halfup_duck("n_hits * 100", str(TOP_K), 2)} AS recall_pct
         FROM hits
         ORDER BY query_id
     """,
@@ -380,8 +372,8 @@ ORACLES = {
             FROM sel GROUP BY 1, 2
         )
         SELECT keep_rule, keep_nb, n_docs,
-               {_hd("n_docs * 100",
-                    "CAST(sum(n_docs) OVER () AS BIGINT)", 4)}
+               {halfup_duck("n_docs * 100",
+                            "CAST(sum(n_docs) OVER () AS BIGINT)", 4)}
                    AS share_pct
         FROM cells
         ORDER BY keep_rule, keep_nb
@@ -538,9 +530,9 @@ ORACLES["nbq_gains"] = f"""
         FROM bands
     )
     SELECT band_lo, n_docs, n_pos,
-           {_hd("100 * n_pos", "n_docs", 4)} AS pos_rate_pct,
-           {_hd("100 * cum_pos", "tot_pos", 4)} AS cum_gain_pct,
-           {_hd("cum_pos * tot_docs", "cum_docs * tot_pos", 4)}
+           {halfup_duck("100 * n_pos", "n_docs", 4)} AS pos_rate_pct,
+           {halfup_duck("100 * cum_pos", "tot_pos", 4)} AS cum_gain_pct,
+           {halfup_duck("cum_pos * tot_docs", "cum_docs * tot_pos", 4)}
                AS cum_lift
     FROM cum
     ORDER BY band_lo DESC

@@ -341,10 +341,6 @@ def a12_table_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("tbl")
 
 
-# Registration order is rotation-relevant (see __spark_entry__ /
-# tests/test_rotation.py): kpi straddles the 50-query driver window
-# in round 6, so its ts-invalidated (0-streak) queries come first and
-# its proven tail can safely fall outside.
 QUERIES = {
     "q1_network_summary": q1_network_summary,
     "q3_hourly_profile": q3_hourly_profile,

@@ -47,16 +47,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.exact import halfup_ratio_sql, halfup_ratio_wide_sql
+from ..functions.exact import (
+    halfup_duck,
+    halfup_expr,
+    halfup_ratio_wide_sql,
+    halfup_wide_expr,
+)
 from ..sources.catalog import load
 
-
-def _halfup(num: str, den: str, digits: int) -> F.Column:
-    return F.expr(halfup_ratio_sql(num, den, digits, engine="spark"))
-
-
-def _halfup_wide(num: str, den: str, digits: int) -> F.Column:
-    return F.expr(halfup_ratio_wide_sql(num, den, digits, engine="spark"))
 
 #: Q1 scan cutoff (data spans 1995-01-02 .. 2001-11-04)
 Q1_CUTOFF = "2000-12-31"
@@ -137,15 +135,15 @@ def tpch_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
             "l_returnflag",
             "l_linestatus",
             "sum_qty",
-            _halfup("_pc", "100", 2).alias("sum_base_price"),
-            _halfup("_ru", "10000", 2).alias("sum_disc_price"),
+            halfup_expr("_pc", "100", 2).alias("sum_base_price"),
+            halfup_expr("_ru", "10000", 2).alias("sum_disc_price"),
             # _ch sums 1e-6-dollar units: already 4.6e15 per group at
             # sf0.1, so the bigint half-up's *2e2 lift would wrap
             # around sf1 (round-7 ADVICE) — ride the 128-bit form
-            _halfup_wide("_ch", "1000000", 2).alias("sum_charge"),
-            _halfup("sum_qty", "count_order", 4).alias("avg_qty"),
-            _halfup("_pc", "count_order * 100", 4).alias("avg_price"),
-            _halfup("_dp", "count_order * 100", 4).alias("avg_disc"),
+            halfup_wide_expr("_ch", "1000000", 2).alias("sum_charge"),
+            halfup_expr("sum_qty", "count_order", 4).alias("avg_qty"),
+            halfup_expr("_pc", "count_order * 100", 4).alias("avg_price"),
+            halfup_expr("_dp", "count_order * 100", 4).alias("avg_disc"),
             "count_order",
         )
         .orderBy("l_returnflag", "l_linestatus")
@@ -177,7 +175,7 @@ def tpch_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
             "l_orderkey",
             "o_orderdate",
             "o_orderpriority",
-            _halfup("_ru", "10000", 2).alias("revenue"),
+            halfup_expr("_ru", "10000", 2).alias("revenue"),
         )
         .orderBy(
             F.col("revenue").desc(), "o_orderdate", "l_orderkey"
@@ -217,7 +215,7 @@ def tpch_regional_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("c_nationkey") == F.col("s_nationkey"))
         .groupBy("n_name")
         .agg(F.sum("rev_u").alias("_ru"))
-        .select("n_name", _halfup("_ru", "10000", 2).alias("revenue"))
+        .select("n_name", halfup_expr("_ru", "10000", 2).alias("revenue"))
         .orderBy(F.col("revenue").desc(), "n_name")
     )
 
@@ -254,7 +252,7 @@ def tpch_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
             "c_name",
             "acctbal",
             "n_name",
-            _halfup("_ru", "10000", 2).alias("revenue"),
+            halfup_expr("_ru", "10000", 2).alias("revenue"),
         )
         .orderBy(F.col("revenue").desc(), "c_custkey")
         .limit(20)
@@ -358,7 +356,7 @@ def tpch_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
             "supp_nation",
             "cust_nation",
             "l_year",
-            _halfup("_ru", "10000", 2).alias("revenue"),
+            halfup_expr("_ru", "10000", 2).alias("revenue"),
         )
         .orderBy("supp_nation", "cust_nation", "l_year")
     )
@@ -507,9 +505,9 @@ def tpch_top_supplier_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(keep)
         .select(
             "l_suppkey",
-            _halfup("_ru", "10000", 2).alias("revenue"),
+            halfup_expr("_ru", "10000", 2).alias("revenue"),
             # widen BEFORE the *100 so the pre-multiply can't wrap
-            _halfup_wide(
+            halfup_wide_expr(
                 "CAST(_ru AS DECIMAL(38,0)) * 100", "_total", 4
             ).alias("share_pct"),
         )
@@ -552,7 +550,7 @@ def tpch_sales_opportunity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "cohort",
             "numcust",
-            _halfup("_bal", "100", 2).alias("totacctbal"),
+            halfup_expr("_bal", "100", 2).alias("totacctbal"),
         )
         .orderBy("cohort")
     )
@@ -608,7 +606,7 @@ def tpch_small_quantity_revenue(
         .select(
             "p_brand",
             "n_small_lines",
-            _halfup("_pc", "100", 2).alias("small_line_revenue"),
+            halfup_expr("_pc", "100", 2).alias("small_line_revenue"),
         )
         .orderBy("p_brand")
     )
@@ -655,7 +653,7 @@ def tpch_disjunctive_revenue(
         .select(
             "clause",
             "n_lines",
-            _halfup("_ru", "10000", 2).alias("revenue"),
+            halfup_expr("_ru", "10000", 2).alias("revenue"),
         )
         .orderBy("clause")
     )
@@ -681,25 +679,23 @@ _SUM_QTY = "CAST(sum(CAST(round(l_quantity) AS BIGINT)) AS BIGINT)"
 _SUM_REV = "CAST(sum(rev_u) AS BIGINT)"
 
 
-def _hd(num: str, den: str, digits: int) -> str:
-    return halfup_ratio_sql(num, den, digits, engine="duck")
-
-
 ORACLES = {
     "tpch_pricing_summary": f"""
         WITH li AS ({_LI_MONEY})
         SELECT l_returnflag, l_linestatus,
                {_SUM_QTY} AS sum_qty,
-               {_hd("CAST(sum(price_c) AS BIGINT)", "100", 2)}
+               {halfup_duck("CAST(sum(price_c) AS BIGINT)", "100", 2)}
                  AS sum_base_price,
-               {_hd(_SUM_REV, "10000", 2)} AS sum_disc_price,
+               {halfup_duck(_SUM_REV, "10000", 2)} AS sum_disc_price,
                {halfup_ratio_wide_sql(
                     "sum(rev_u * (100 + tax_p))",
                     "1000000", 2, engine="duck")} AS sum_charge,
-               {_hd(_SUM_QTY, "count(*)", 4)} AS avg_qty,
-               {_hd("CAST(sum(price_c) AS BIGINT)", "count(*) * 100", 4)}
+               {halfup_duck(_SUM_QTY, "count(*)", 4)} AS avg_qty,
+               {halfup_duck("CAST(sum(price_c) AS BIGINT)",
+                            "count(*) * 100", 4)}
                  AS avg_price,
-               {_hd("CAST(sum(disc_p) AS BIGINT)", "count(*) * 100", 4)}
+               {halfup_duck("CAST(sum(disc_p) AS BIGINT)",
+                            "count(*) * 100", 4)}
                  AS avg_disc,
                count(*) AS count_order
         FROM li
@@ -710,7 +706,7 @@ ORACLES = {
     "tpch_shipping_priority": f"""
         WITH li AS ({_LI_MONEY})
         SELECT l_orderkey, o_orderdate, o_orderpriority,
-               {_hd(_SUM_REV, '10000', 2)} AS revenue
+               {halfup_duck(_SUM_REV, '10000', 2)} AS revenue
         FROM li
         JOIN orders ON l_orderkey = o_orderkey
         JOIN customer ON o_custkey = c_custkey
@@ -724,7 +720,7 @@ ORACLES = {
     "tpch_regional_revenue": f"""
         WITH li AS ({_LI_MONEY})
         SELECT n_name,
-               {_hd(_SUM_REV, '10000', 2)} AS revenue
+               {halfup_duck(_SUM_REV, '10000', 2)} AS revenue
         FROM li
         JOIN orders ON l_orderkey = o_orderkey
         JOIN customer ON o_custkey = c_custkey
@@ -758,7 +754,7 @@ ORACLES = {
         WITH li AS ({_LI_MONEY})
         SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
                CAST(year(l_shipdate) AS INT) AS l_year,
-               {_hd(_SUM_REV, '10000', 2)} AS revenue
+               {halfup_duck(_SUM_REV, '10000', 2)} AS revenue
         FROM li
         JOIN supplier ON l_suppkey = s_suppkey
         JOIN orders ON l_orderkey = o_orderkey
@@ -774,7 +770,7 @@ ORACLES = {
         WITH li AS ({_LI_MONEY})
         SELECT c_custkey, c_name, round(c_acctbal, 2) AS acctbal,
                n_name,
-               {_hd(_SUM_REV, '10000', 2)} AS revenue
+               {halfup_duck(_SUM_REV, '10000', 2)} AS revenue
         FROM li
         JOIN orders ON l_orderkey = o_orderkey
         JOIN customer ON o_custkey = c_custkey
@@ -841,7 +837,7 @@ ORACLES["tpch_top_supplier_share"] = f"""
         SELECT sum(ru) AS total, count(*) AS nsup FROM ps
     )
     SELECT l_suppkey,
-           {_hd('CAST(ps.ru AS BIGINT)', '10000', 2)} AS revenue,
+           {halfup_duck('CAST(ps.ru AS BIGINT)', '10000', 2)} AS revenue,
            {halfup_ratio_wide_sql('ps.ru * 100', 't.total', 4,
                                   engine='duck')} AS share_pct
     FROM ps, t
@@ -862,7 +858,7 @@ ORACLES["tpch_sales_opportunity"] = f"""
     )
     SELECT substring(c_name, 10, 2) AS cohort,
            count(*) AS numcust,
-           {_hd('CAST(sum(bal_c) AS BIGINT)', '100', 2)} AS totacctbal
+           {halfup_duck('CAST(sum(bal_c) AS BIGINT)', '100', 2)} AS totacctbal
     FROM c, p
     WHERE bal_c * n_pos > sum_pos
       AND NOT EXISTS (
@@ -888,7 +884,7 @@ ORACLES["tpch_small_quantity_revenue"] = f"""
         WINDOW w AS (PARTITION BY l_partkey)
     )
     SELECT p_brand, count(*) AS n_small_lines,
-           {_hd('CAST(sum(price_c) AS BIGINT)', '100', 2)}
+           {halfup_duck('CAST(sum(price_c) AS BIGINT)', '100', 2)}
                AS small_line_revenue
     FROM j
     WHERE qty * {Q17_FRAC_DEN} * nq < sq
@@ -914,7 +910,7 @@ ORACLES["tpch_disjunctive_revenue"] = f"""
         FROM j
     )
     SELECT clause, count(*) AS n_lines,
-           {_hd('CAST(sum(rev_u) AS BIGINT)', '10000', 2)} AS revenue
+           {halfup_duck('CAST(sum(rev_u) AS BIGINT)', '10000', 2)} AS revenue
     FROM c
     WHERE clause IS NOT NULL
     GROUP BY clause

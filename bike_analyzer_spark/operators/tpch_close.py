@@ -39,16 +39,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.exact import halfup_ratio_sql, halfup_ratio_wide_sql
+from ..functions.exact import (
+    halfup_duck,
+    halfup_expr,
+    halfup_ratio_wide_sql,
+    halfup_wide_expr,
+)
 from ..sources.catalog import load
-
-
-def _halfup(num: str, den: str, digits: int) -> F.Column:
-    return F.expr(halfup_ratio_sql(num, den, digits, engine="spark"))
-
-
-def _halfup_wide(num: str, den: str, digits: int) -> F.Column:
-    return F.expr(halfup_ratio_wide_sql(num, den, digits, engine="spark"))
 
 
 def _signed_halfup_wide_sql(num: str, den: str, digits: int,
@@ -127,7 +124,7 @@ def tpch_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("price_c") * F.col("disc_p")).alias("_du"),
     ).select(
         "n_lines",
-        _halfup_wide("_du", "10000", 2).alias("forecast_revenue"),
+        halfup_wide_expr("_du", "10000", 2).alias("forecast_revenue"),
     )
 
 
@@ -187,7 +184,7 @@ def tpch_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_name"),
             F.col("p_partkey"),
             F.col("p_size"),
-            _halfup("cost_c", "100", 2).alias("supply_cost"),
+            halfup_expr("cost_c", "100", 2).alias("supply_cost"),
         )
         .orderBy(F.desc("acctbal"), "n_name", "s_name", "p_partkey")
         .limit(100)
@@ -253,8 +250,8 @@ def tpch_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(
             "o_year",
-            _halfup_wide("_all_u", "10000", 2).alias("total_revenue"),
-            _halfup_wide("_nat_u * 100", "_all_u", 4).alias(
+            halfup_wide_expr("_all_u", "10000", 2).alias("total_revenue"),
+            halfup_wide_expr("_nat_u * 100", "_all_u", 4).alias(
                 "mkt_share_pct"
             ),
         )
@@ -343,7 +340,7 @@ def tpch_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("s_suppkey"),
             "s_name",
-            _halfup("_ru", "10000", 2).alias("total_revenue"),
+            halfup_expr("_ru", "10000", 2).alias("total_revenue"),
         )
         .orderBy("s_suppkey")
     )
@@ -495,10 +492,6 @@ _LI_MONEY = """
 """
 
 
-def _hd(num: str, den: str, digits: int) -> str:
-    return halfup_ratio_sql(num, den, digits, engine="duck")
-
-
 def _hw(num: str, den: str, digits: int) -> str:
     return halfup_ratio_wide_sql(num, den, digits, engine="duck")
 
@@ -538,7 +531,7 @@ ORACLES = {
         )
         SELECT round(s_acctbal, 2) AS acctbal, s_name, n_name,
                p_partkey, p_size,
-               {_hd("cost_c", "100", 2)} AS supply_cost
+               {halfup_duck("cost_c", "100", 2)} AS supply_cost
         FROM j
         WHERE cost_c = min_c
         ORDER BY acctbal DESC, n_name, s_name, p_partkey
@@ -606,7 +599,7 @@ ORACLES = {
             GROUP BY 1
         )
         SELECT s_suppkey, s_name,
-               {_hd("ru", "10000", 2)} AS total_revenue
+               {halfup_duck("ru", "10000", 2)} AS total_revenue
         FROM ps
         JOIN supplier ON l_suppkey = s_suppkey
         WHERE ru = (SELECT max(ru) FROM ps)

@@ -3,14 +3,6 @@ didn't cover yet: conditional-aggregate ratio over a dim join (TPC-H
 Q14 shape), dimension-filtered ANTI join, correlated-scalar-subquery-
 rewritten-as-window, and CUBE with grouping ids.
 
-STAGED FOR ROUND 8 REGISTRATION: every round-7 driver-window slot is
-occupied by a <2-streak query (tests/test_rotation.py forbids new
-registrations without a freed slot; ~48 slots free once the r7 greens
-land). The queries are fully oracle-gated by pytest
-(tests/test_warehouse_ext.py drives the same DuckDB comparison the
-driver runs) and `__spark_entry__._MODULES` picks this module up in
-round 8 by adding it to the list.
-
 Exactness discipline (functions/exact): money lifts to integer cents,
 ratios/averages display through pure-bigint half-up, the
 above-own-average comparison runs as an INTEGER cross-multiplication
@@ -24,21 +16,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.exact import halfup_ratio_sql, halfup_ratio_wide_sql
+from ..functions.exact import (
+    halfup_duck,
+    halfup_expr,
+    halfup_ratio_sql,
+    halfup_ratio_wide_sql,
+    halfup_wide_expr,
+)
 from ..sources.catalog import load
 
 #: Q14-shape scan window (multiple months so the ratio has a series)
 PROMO_START, PROMO_END = "1998-01-01", "1998-07-01"
 #: dormancy window for the anti join
 DORMANT_START, DORMANT_END = "1999-01-01", "2000-01-01"
-
-
-def _halfup(num: str, den: str, digits: int) -> F.Column:
-    return F.expr(halfup_ratio_sql(num, den, digits, engine="spark"))
-
-
-def _halfup_wide(num: str, den: str, digits: int) -> F.Column:
-    return F.expr(halfup_ratio_wide_sql(num, den, digits, engine="spark"))
 
 
 def tpch_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -89,8 +79,8 @@ def tpch_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(
             "ship_month",
-            _halfup_wide("_promo", "10000", 2).alias("promo_revenue"),
-            _halfup_wide("_promo * 100", "_total", 4).alias("promo_pct"),
+            halfup_wide_expr("_promo", "10000", 2).alias("promo_revenue"),
+            halfup_wide_expr("_promo * 100", "_total", 4).alias("promo_pct"),
         )
         .orderBy("ship_month")
     )
@@ -152,7 +142,7 @@ def above_avg_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             "o_custkey",
             "n_orders",
             "n_above_own_avg",
-            _halfup("_maxc", "100", 2).alias("max_order"),
+            halfup_expr("_maxc", "100", 2).alias("max_order"),
         )
         .orderBy("o_custkey")
     )
@@ -245,7 +235,7 @@ def event_gap_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type",
             "n_gaps",
             "max_gap_us",
-            _halfup("_sum_ms", "n_gaps * 1000", 4).alias("avg_gap_sec"),
+            halfup_expr("_sum_ms", "n_gaps * 1000", 4).alias("avg_gap_sec"),
         )
         .orderBy("event_type")
     )
@@ -273,7 +263,7 @@ def purchase_value_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("_n", F.count(F.lit(1)).over(Window.partitionBy("user_id")))
     )
     pct = F.when(F.col("_n") == 1, F.lit(0.0)).otherwise(
-        _halfup("rn - 1", "_n - 1", 6)
+        halfup_expr("rn - 1", "_n - 1", 6)
     )
     return (
         ranked.filter(F.col("rn") <= 3)
@@ -283,7 +273,7 @@ def purchase_value_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_id",
             "v_m",
             pct.alias("pct_rank"),
-            _halfup("rn", "_n", 6).alias("cume_dist"),
+            halfup_expr("rn", "_n", 6).alias("cume_dist"),
         )
         .orderBy("user_id", "rn")
     )
@@ -499,10 +489,6 @@ QUERIES = {
 }
 
 
-def _hd(num: str, den: str, digits: int) -> str:
-    return halfup_ratio_sql(num, den, digits, engine="duck")
-
-
 ORACLES = {
     "event_gap_profile": f"""
         WITH g AS (
@@ -520,7 +506,7 @@ ORACLES = {
             GROUP BY event_type
         )
         SELECT event_type, n_gaps, max_gap_us,
-               {_hd('s_ms', 'n_gaps * 1000', 4)} AS avg_gap_sec
+               {halfup_duck('s_ms', 'n_gaps * 1000', 4)} AS avg_gap_sec
         FROM a ORDER BY event_type
     """,
     "purchase_value_rank": f"""
@@ -538,8 +524,8 @@ ORACLES = {
         )
         SELECT user_id, CAST(rn AS INT) AS rn, event_id, v_m,
                CASE WHEN n = 1 THEN CAST(0 AS DOUBLE)
-                    ELSE {_hd('rn - 1', 'n - 1', 6)} END AS pct_rank,
-               {_hd('rn', 'n', 6)} AS cume_dist
+                    ELSE {halfup_duck('rn - 1', 'n - 1', 6)} END AS pct_rank,
+               {halfup_duck('rn', 'n', 6)} AS cume_dist
         FROM r WHERE rn <= 3
         ORDER BY user_id, rn
     """,
@@ -604,7 +590,7 @@ ORACLES = {
         )
         SELECT g.o_custkey, g.n_orders,
                a.n_above AS n_above_own_avg,
-               {_hd('g.maxc', '100', 2)} AS max_order
+               {halfup_duck('g.maxc', '100', 2)} AS max_order
         FROM g JOIN a USING (o_custkey)
         ORDER BY o_custkey
     """,
@@ -1028,8 +1014,8 @@ def revenue_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_name").alias("nation"),
         F.col("n_customers").cast("bigint").alias("n_customers"),
         F.col("n_top").cast("bigint").alias("n_top80"),
-        _halfup("100 * n_top", "n_customers", 4).alias("top80_cust_pct"),
-        _halfup_wide("100 * covered", "tot", 4).alias(
+        halfup_expr("100 * n_top", "n_customers", 4).alias("top80_cust_pct"),
+        halfup_wide_expr("100 * covered", "tot", 4).alias(
             "covered_rev_pct"
         ),
     ).orderBy("nation")

@@ -26,21 +26,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.exact import halfup_ratio_sql
+from ..functions.exact import halfup_duck, halfup_expr
 from ..sources.catalog import load
 
 #: quartile count for the NTILE bucketing
 N_TILES = 4
 #: navigation probe: the k-th purchase by time
 NTH_K = 2
-
-
-def _halfup(num: str, den: str, digits: int) -> F.Column:
-    return F.expr(halfup_ratio_sql(num, den, digits, engine="spark"))
-
-
-def _hd(num: str, den: str, digits: int) -> str:
-    return halfup_ratio_sql(num, den, digits, engine="duck")
 
 
 def _purchases(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -75,7 +67,7 @@ def purchase_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "quartile",
             "n_purchases",
-            _halfup("_vm", "1000", 3).alias("total_value"),
+            halfup_expr("_vm", "1000", 3).alias("total_value"),
         )
         .orderBy("quartile")
     )
@@ -114,9 +106,9 @@ def user_value_navigation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "user_id",
             "n_purchases",
-            _halfup("_f", "1000", 3).alias("first_value"),
-            _halfup("coalesce(_n, 0)", "1000", 3).alias("second_value"),
-            _halfup("_l", "1000", 3).alias("last_value"),
+            halfup_expr("_f", "1000", 3).alias("first_value"),
+            halfup_expr("coalesce(_n, 0)", "1000", 3).alias("second_value"),
+            halfup_expr("_l", "1000", 3).alias("last_value"),
         )
         .orderBy("user_id")
     )
@@ -157,7 +149,7 @@ def event_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce(F.col("hour"), F.lit(-1)).alias("hour"),
             "gid",
             "n_events",
-            _halfup("_vm", "1000", 3).alias("total_value"),
+            halfup_expr("_vm", "1000", 3).alias("total_value"),
         )
         .orderBy("gid", "event_type", "hour")
     )
@@ -187,7 +179,7 @@ ORACLES = {
         )
         SELECT CAST(quartile AS INT) AS quartile,
                count(*) AS n_purchases,
-               {_hd("CAST(sum(v_m) AS BIGINT)", "1000", 3)}
+               {halfup_duck("CAST(sum(v_m) AS BIGINT)", "1000", 3)}
                    AS total_value
         FROM t
         GROUP BY 1
@@ -207,10 +199,11 @@ ORACLES = {
                          AND UNBOUNDED FOLLOWING)
         )
         SELECT user_id, count(*) AS n_purchases,
-               {_hd("CAST(min(f) AS BIGINT)", "1000", 3)} AS first_value,
-               {_hd("CAST(coalesce(min(n), 0) AS BIGINT)", "1000", 3)}
+               {halfup_duck("CAST(min(f) AS BIGINT)",
+                            "1000", 3)} AS first_value,
+               {halfup_duck("CAST(coalesce(min(n), 0) AS BIGINT)", "1000", 3)}
                    AS second_value,
-               {_hd("CAST(min(l) AS BIGINT)", "1000", 3)} AS last_value
+               {halfup_duck("CAST(min(l) AS BIGINT)", "1000", 3)} AS last_value
         FROM nav
         GROUP BY user_id
         ORDER BY user_id
@@ -221,7 +214,7 @@ ORACLES = {
                CAST(GROUPING(event_type) * 2 + GROUPING(hour) AS INT)
                    AS gid,
                count(*) AS n_events,
-               {_hd("CAST(sum(v_m) AS BIGINT)", "1000", 3)}
+               {halfup_duck("CAST(sum(v_m) AS BIGINT)", "1000", 3)}
                    AS total_value
         FROM (
             SELECT event_type,
@@ -292,7 +285,7 @@ def purchase_value_distribution(
             "user_id",
             "n_purchases",
             F.col("event_id").alias("top_event_id"),
-            _halfup("v_m", "1000", 3).alias("top_value"),
+            halfup_expr("v_m", "1000", 3).alias("top_value"),
             F.col("pr_micro").alias("top_percent_rank_micro"),
             F.col("cd_micro").alias("top_cume_dist_micro"),
         )
@@ -323,7 +316,7 @@ ORACLES["purchase_value_distribution"] = f"""
     )
     SELECT user_id, n_purchases,
            event_id AS top_event_id,
-           {_hd('v_m', '1000', 3)} AS top_value,
+           {halfup_duck('v_m', '1000', 3)} AS top_value,
            pr_micro AS top_percent_rank_micro,
            cd_micro AS top_cume_dist_micro
     FROM d WHERE rn = 1

@@ -1,6 +1,10 @@
 """Smoke tests for the driver contract surface."""
 
+import pkgutil
+from importlib import import_module
+
 import __spark_entry__ as entrymod
+from bike_analyzer_spark import operators
 
 
 def test_entry_returns_rows(spark):
@@ -8,11 +12,18 @@ def test_entry_returns_rows(spark):
     assert df.count() > 0
 
 
-def test_queries_and_oracles_aligned(spark):
+def test_queries_and_oracles_aligned():
+    """No Spark needed: queries() and oracle_sql() name the same
+    queries, and every operator module that defines QUERIES is
+    registered. Per-query checks live in tests/test_rotation.py."""
     qs = entrymod.queries()
-    oracles = entrymod.oracle_sql()
     assert qs, "queries() must not be empty"
-    # every oracle key must have a query; queries without oracle are
-    # allowed (rows-only check) but flagged here for visibility
-    missing = set(oracles) - set(qs)
-    assert not missing, f"oracle_sql keys without queries(): {missing}"
+    assert set(qs) == set(entrymod.oracle_sql())
+
+    defining = {
+        info.name
+        for info in pkgutil.iter_modules(operators.__path__)
+        if hasattr(import_module(f"{operators.__name__}.{info.name}"),
+                   "QUERIES")
+    }
+    assert defining == set(entrymod.MODULE_NAMES)

@@ -1,55 +1,16 @@
-"""Correctness-window rotation invariant.
+"""Correctness-window seating rules.
 
 The driver records only the FIRST 50 queries of ``queries()`` in
-CORRECTNESS_r{N}.json. Round 3 proved how easily new operators drift
-outside that window silently (10 queries shipped un-driver-verified
-while README claimed otherwise); round 4 fixed it with a manual
-reorder, rounds 5-8 ran a "streak<2 must be inside" rule. That rule
-deadlocked once the corpus outgrew the window (round 8: 46 streak-0
-queries queued outside while streak-1 queries held slots — the
-backlog could only drain ~2 slots per round). Round 9 re-derived the
-policy streak-0-first:
+CORRECTNESS_r{N}.json. ``__spark_entry__.WINDOW_FIRST`` names the
+queries seated there ahead of module order, and every query that
+lacks two consecutive driver greens must be among them, so no new or
+unproven query can drift outside the window unchecked.
 
-    the window must be a minimum-priority prefix of the registration
-    order, where priority = min(green_streak, 2) and a declared
-    edited-module rotate-back has priority 0. Concretely: no query
-    outside the window may have a strictly LOWER priority than any
-    query inside it. A never-driver-checked query (streak 0) always
-    outranks a streak-1 query, which always outranks a proven
-    (streak ≥2) query, because the window's purpose is maximizing
-    marginal driver evidence.
-
-Green streaks are derived straight from the committed
-CORRECTNESS_r*.json history — present+green extends the streak,
-present+red resets it, absent leaves it unchanged (the query was not
-checked that round, which is neither evidence for nor against). A
-query never recorded (e.g. newly added) has streak 0.  "Committed"
-is literal: only git-TRACKED CORRECTNESS files count.  The round
-driver drops the current round's CORRECTNESS_r{N}.json untracked
-into the worktree *before* running pytest, and for five rounds
-running that artifact tripped these invariants mid-verify (the
-window is planned against the committed history; the brand-new
-artifact shifts every streak by one round).  Evidence the builder
-has not yet rotated against is not evidence of a stale window.
-
-Two amendments to the base rule:
-
-* **Round-5 ts-unit invalidation.** The round-5 testdata regeneration
-  changed events.ts from TIMESTAMP(NANOS) to TIMESTAMP(MICROS) while
-  the loader hard-assumed nanos, so every query deriving buckets,
-  sessions, ranges, or hour strings from events.ts produced wrong
-  answers that round — including seven queries that sat OUTSIDE the
-  driver window and so have no red record. All 22 affected queries
-  have their streak forced to 0 through round 5: greens earned on
-  pre-fix timestamps are not evidence. They re-earn proven status
-  from round 6 onward.
-
-* **Edited-module policy (manual).** Streaks do not auto-reset when
-  an operator module is edited after its last green round; rotating
-  a meaningfully-changed query back inside the window is a manual
-  step for the round that ships the change (considered: comparing
-  module git-blob ages against the newest CORRECTNESS file — too
-  coarse, any comment touch would evict a proven module).
+Green streaks come from the git-TRACKED CORRECTNESS_r*.json history
+in round order: present+green extends a streak, present+red resets
+it, absent leaves it unchanged; a query never recorded has streak 0.
+Only committed files count, because the driver drops the current
+round's artifact untracked into the worktree before running pytest.
 """
 
 from __future__ import annotations
@@ -59,70 +20,37 @@ import json
 import os
 import re
 import subprocess
+import warnings
+
+import __spark_entry__ as entry_mod
 
 DRIVER_WINDOW = 50
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def _tracked_correctness_paths() -> "list[str]":
-    """CORRECTNESS_r*.json files that are committed (git-tracked).
+def _round_of(path: str) -> int:
+    return int(re.search(r"r(\d+)", os.path.basename(path)).group(1))
 
-    The driver's own fresh artifact for the round in progress sits
-    untracked in the worktree while pytest runs; including it would
-    judge the window against history the builder could not have
-    rotated on yet. Outside a git checkout (sdist, CI export) fall
-    back to every file on disk — there untracked artifacts cannot
-    exist.
-    """
+
+def _tracked_correctness_paths() -> "list[str]":
+    """CORRECTNESS_r*.json files that are committed, in round order.
+    Outside a git checkout every file on disk counts, with a warning."""
     on_disk = sorted(
         glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")), key=_round_of
     )
     try:
         out = subprocess.run(
             ["git", "-C", REPO, "ls-files", "CORRECTNESS_r*.json"],
-            capture_output=True,
-            text=True,
-            timeout=30,
-            check=True,
+            capture_output=True, text=True, timeout=30, check=True,
         ).stdout.split()
-    except (OSError, subprocess.SubprocessError):
+    except (OSError, subprocess.SubprocessError) as exc:
+        warnings.warn(
+            f"git ls-files failed ({exc!r}); streaks use every "
+            f"CORRECTNESS_r*.json on disk, tracked or not"
+        )
         return on_disk
     tracked = {os.path.basename(p) for p in out}
     return [p for p in on_disk if os.path.basename(p) in tracked]
-
-#: Queries whose round-≤5 results (green, red, or unrecorded) are void:
-#: they consume events.ts, which the loader read at 1000x the true
-#: unit in round 5 (see tests/test_data_contract.py for the guard).
-_R5_TS_INVALIDATED = frozenset(
-    {
-        "q1_network_summary",
-        "q3_hourly_profile",
-        "q4_hourly_correlation",
-        "a2_time_bounds",
-        "a7_last_per_bucket",
-        "w1_lag_delta",
-        "w3_latest_snapshot",
-        "od_pagerank",
-        "profile_events",
-        "busy_islands",
-        "range_join_busy",
-        "hypertable_rollup",
-        "asof_hourly_stats",
-        "session_stats",
-        "session_window_stats",
-        "rollup_by_type_hour",
-        "pivot_hour_by_type",
-        "od_flows_topn",
-        "od_flow_conservation",
-        "od_flows_with_coords",
-        "p2_time_range",
-        "s14_sql_corpus",
-    }
-)
-
-
-def _round_of(path: str) -> int:
-    return int(re.search(r"r(\d+)", os.path.basename(path)).group(1))
 
 
 def _green_streaks() -> dict[str, int]:
@@ -131,87 +59,34 @@ def _green_streaks() -> dict[str, int]:
         with open(path) as f:
             recs = json.load(f)
         for q, rec in recs.items():
-            ok = bool(
-                rec.get("rows_match")
-                and rec.get("schema_match")
-                and rec.get("hash_match")
-            )
+            ok = all(rec.get(k) for k in
+                     ("rows_match", "schema_match", "hash_match"))
             streak[q] = streak.get(q, 0) + 1 if ok else 0
-        if _round_of(path) <= 5:
-            for q in _R5_TS_INVALIDATED:
-                streak[q] = 0
     return streak
 
 
-def _priorities() -> "tuple[list[str], dict[str, int]]":
-    import __spark_entry__ as entry_mod
+def test_window_first_leads_the_registry():
+    first = list(entry_mod.WINDOW_FIRST)
+    order = list(entry_mod.queries())  # KeyError on an unregistered name
+    assert len(first) == len(set(first)), "WINDOW_FIRST has duplicates"
+    assert len(first) <= DRIVER_WINDOW
+    assert order[: len(first)] == first
 
-    order = list(entry_mod.queries())
+
+def test_unproven_queries_are_in_window_first():
     streaks = _green_streaks()
-    rotatebacks = getattr(entry_mod, "WINDOW_ROTATEBACKS", frozenset())
-    prio = {
-        q: 0 if q in rotatebacks else min(streaks.get(q, 0), 2)
-        for q in order
-    }
-    return order, prio
-
-
-def test_window_is_min_priority_prefix():
-    """Streak-0-first: no query outside the window may outrank (have
-    a strictly lower priority than) any query inside it. Ties may
-    cross the boundary — when streak-1 queries outnumber the slots
-    left after all streak-0 queries are seated, SOME streak-1 queries
-    legitimately wait outside (in WINDOW_OVERFLOW, below)."""
-    order, prio = _priorities()
-    inside, outside = order[:DRIVER_WINDOW], order[DRIVER_WINDOW:]
-    if not outside:
-        return
-    worst_in = max(prio[q] for q in inside)
-    best_out = min(prio[q] for q in outside)
-    offenders_in = sorted(q for q in inside if prio[q] == worst_in)
-    offenders_out = sorted(q for q in outside if prio[q] == best_out)
-    assert worst_in <= best_out, (
-        f"window slots held by priority-{worst_in} queries "
-        f"({offenders_in[:8]}...) while priority-{best_out} queries sit "
-        f"outside ({offenders_out[:8]}...) — reorder _MODULES in "
-        f"__spark_entry__.py: lower streak goes first"
+    unproven = {
+        q for q in entry_mod.queries() if streaks.get(q, 0) < 2
+    } - set(entry_mod.WINDOW_FIRST)
+    assert not unproven, (
+        f"queries with <2 consecutive driver greens must be listed in "
+        f"__spark_entry__.WINDOW_FIRST: {sorted(unproven)}"
     )
-
-
-def test_overflow_is_exactly_the_unproven_outside():
-    """WINDOW_OVERFLOW is not a loophole but a ledger: it must list
-    EXACTLY the queries outside the window that still lack 2
-    consecutive driver greens (priority < 2). An omission hides an
-    unproven query; a stale entry claims pressure that isn't there."""
-    import __spark_entry__ as entry_mod
-
-    order, prio = _priorities()
-    declared = set(getattr(entry_mod, "WINDOW_OVERFLOW", frozenset()))
-    actual = {q for q in order[DRIVER_WINDOW:] if prio[q] < 2}
-    missing = sorted(actual - declared)
-    stale = sorted(declared - actual)
-    assert declared == actual, (
-        f"WINDOW_OVERFLOW out of sync — missing (unproven outside, "
-        f"undeclared): {missing}; stale (declared but proven or inside): "
-        f"{stale}"
-    )
-
-
-def test_rotatebacks_are_registered_and_stay_unproven_only_one_round():
-    """A rotate-back names a real query; once the post-edit green
-    history reaches 2 consecutive rounds the entry must be removed
-    (otherwise it pins a window slot forever)."""
-    import __spark_entry__ as entry_mod
-
-    order = list(entry_mod.queries())
-    for q in getattr(entry_mod, "WINDOW_ROTATEBACKS", frozenset()):
-        assert q in order, f"rotate-back {q} is not a registered query"
 
 
 def test_round_files_sort_numerically():
-    """r100 must sort after r11, not between r10 and r11 (lexicographic
-    order breaks streak derivation once rounds reach 3 digits)."""
-    assert _round_of("CORRECTNESS_r100.json") == 100
+    """r100 must sort after r11 (lexicographic order would break
+    streak derivation once rounds reach 3 digits)."""
     files = ["CORRECTNESS_r2.json", "CORRECTNESS_r100.json",
              "CORRECTNESS_r11.json"]
     assert sorted(files, key=_round_of) == [
@@ -222,39 +97,30 @@ def test_round_files_sort_numerically():
 
 
 def test_no_duplicate_registrations():
-    """No module/slice object may appear twice in _MODULES, and no
-    query name may be contributed by two entries. Registration order
-    IS the driver contract; a duplicate is harmless only while both
-    copies sit outside the window (dict update is idempotent), but it
-    silently shifts every later query's slot — r9 shipped a duplicate
-    ivfpq entry that way. Make the class unrepresentable."""
-    import __spark_entry__ as entry_mod
-
+    """No module may appear twice in _MODULES, and no query name may
+    be contributed by two modules: a duplicate silently shifts every
+    later query's slot in the registration order."""
     mods = entry_mod._MODULES
     seen_ids: dict[int, int] = {}
     for i, m in enumerate(mods):
         assert id(m) not in seen_ids, (
             f"_MODULES entry {i} is the same object as entry "
-            f"{seen_ids[id(m)]} ({getattr(m, '__name__', m)})"
+            f"{seen_ids[id(m)]} ({m.__name__})"
         )
         seen_ids[id(m)] = i
-    owners: dict[str, int] = {}
-    for i, m in enumerate(mods):
+    owners: dict[str, str] = {}
+    for m in mods:
         for q in m.QUERIES:
             assert q not in owners, (
-                f"query {q!r} registered by both _MODULES[{owners[q]}] "
-                f"and _MODULES[{i}]"
+                f"query {q!r} registered by {owners[q]} and {m.__name__}"
             )
-            owners[q] = i
+            owners[q] = m.__name__
 
 
 def test_registry_is_consistent():
     """Every query has a callable; every oracle key is a query key (a
     dangling oracle means a renamed query silently loses its gate)."""
-    import __spark_entry__ as entry_mod
-
     qs = entry_mod.queries()
-    oracles = entry_mod.oracle_sql()
     assert all(callable(f) for f in qs.values())
-    dangling = sorted(set(oracles) - set(qs))
+    dangling = sorted(set(entry_mod.oracle_sql()) - set(qs))
     assert not dangling, f"oracles without a matching query: {dangling}"

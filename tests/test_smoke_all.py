@@ -14,10 +14,9 @@ def test_smoke_sf0001(spark, name):
     rows = df.collect()
     assert rows is not None
 
+
 def test_every_query_has_oracle_or_documented_exception():
-    """Round-3: EVERY queries() entry has an oracle_sql twin — the
-    greedy OD kernel runs as a DuckDB recursive CTE (one match per
-    bucket per iteration) and the two graph fixpoints unroll as
-    recursive CTEs, so the former rows-only exemption set is empty."""
+    """EVERY queries() entry has an oracle_sql twin; the rows-only
+    exemption set is empty."""
     missing = set(em.queries()) - set(em.oracle_sql())
     assert not missing, f"queries without oracle: {missing}"
