@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from ..functions.exact import cents, halfup_avg_sql
 from ..sources.catalog import load
+from . import sorted_small
 
 GRAINS = ("minute", "hour", "day")
 
@@ -107,7 +108,7 @@ def hypertable_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         out(day, "day")
         .unionByName(out(hour, "hour"))
         .unionByName(minute_summary)
-        .orderBy("grain", "bucket_us", "event_type")
+        .transform(sorted_small, "grain", "bucket_us", "event_type")
     )
 
 

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from ..functions.exact import cents, halfup_avg_sql, halfup_ratio_sql
 from ..sources.catalog import load
+from . import sorted_small
 
 HOUR_ISO = "yyyy-MM-dd'T'HH:00:00"  # byte-format of reference queries.sql:48
 
@@ -167,7 +168,7 @@ def q4_hourly_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
             "purchases",
             "views",
         )
-        .orderBy("hour")
+        .transform(sorted_small, "hour")
     )
 
 

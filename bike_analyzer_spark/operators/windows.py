@@ -46,6 +46,7 @@ from ..functions.exact import (
 #: Spark side's floordiv_sql; see functions/exact.py)
 _TS_S_FLOOR = floordiv_duck("epoch_us(ts)", 1_000_000)
 from ..sources.catalog import load
+from . import sorted_small
 
 def lag_delta(events: DataFrame, minutes: int | None = None) -> DataFrame:
     """W1: per-key inventory delta between consecutive snapshots.
@@ -140,7 +141,7 @@ def w3_latest_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_events"),
             F.round(F.sum("value"), 4).alias("sum_value"),
         )
-        .orderBy("event_type")
+        .transform(sorted_small, "event_type")
     )
 
 

@@ -21,7 +21,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 
@@ -46,7 +46,12 @@ def merge_upsert(
     order_col: str,
 ) -> int:
     """Upsert `new` into the parquet table at `path`, keeping the
-    newest row per key. Returns the resulting row count.
+    newest row per key. Returns the resulting row count. An empty
+    `new` rewrites the same rows (a first call creates an empty table).
+
+    The count rides the staging write as an observed metric (the
+    `pipeline.run_corpus_build` pattern), so the merge costs the
+    write's jobs only, not a re-read of the staged table.
 
     Crash safety: the two renames of the swap are NOT jointly atomic —
     a kill between them leaves the previous table stranded at
@@ -63,10 +68,12 @@ def merge_upsert(
         merged = keep_latest(new, key_cols, order_col)
     # Stage first: overwriting the path we are reading would truncate
     # the table mid-scan.
-    merged.write.mode("overwrite").parquet(staging)
-    n = spark.read.parquet(staging).count()
+    obs = Observation()
+    merged.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
+        "overwrite"
+    ).parquet(staging)
     _swap_staging(path)
-    return n
+    return obs.get["n"]
 
 
 def _staging_dir(path: str) -> str:

@@ -34,7 +34,8 @@ import json
 import os
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 _MANIFEST = "_MANIFEST.json"
 
@@ -71,9 +72,12 @@ def commit(df: DataFrame, table_dir: str) -> int:
     vdir = _version_dir(table_dir, version)
     if os.path.exists(vdir):  # orphan of a crashed commit
         shutil.rmtree(vdir)
-    df.write.mode("overwrite").parquet(vdir)
-    n = df.sparkSession.read.parquet(vdir).count()
-    m["versions"][str(version)] = {"n_rows": n}
+    # the row count is observed during the write, not re-read after it
+    obs = Observation()
+    df.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
+        "overwrite"
+    ).parquet(vdir)
+    m["versions"][str(version)] = {"n_rows": obs.get["n"]}
     m["latest"] = version
     tmp = _manifest_path(table_dir) + ".tmp"
     with open(tmp, "w") as f:
@@ -170,7 +174,6 @@ def diff(
     to_json delimits every field and keeps nulls distinct from
     empty strings. Incremental consumers replay `diff(latest-1, latest)`
     instead of re-reading the snapshot."""
-    from pyspark.sql import functions as F
 
     def digested(v: int) -> DataFrame:
         df = read(spark, table_dir, v)
@@ -265,7 +268,6 @@ def merge_into(
     rollback), which in-place MERGE implementations give up.
     """
     spark = source.sparkSession
-    from pyspark.sql import functions as F
 
     dup = (
         source.groupBy(*key_cols)

@@ -124,11 +124,10 @@ def foreach_batch_upsert(
 ) -> None:
     """Streaming keep-latest upsert: every micro-batch merges into the
     target keyed on station_id, newest scraped_at wins — the streaming
-    face of the reference's polling upsert."""
+    face of the reference's polling upsert. An empty micro-batch
+    merges to the same rows."""
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         sinks.merge_upsert(
             spark, batch_df, path, ["station_id"], "scraped_at"
         )

@@ -97,3 +97,14 @@ def assert_matches_oracle(spark_df, duck_con, oracle_sql, name=""):
     )
     for i, (a, b) in enumerate(zip(s_rows, d_rows)):
         assert a == b, f"{name}: row {i} differs:\n  spark={a}\n  duck ={b}"
+
+
+def assert_same_rows_in_order(spark_df, duck_con, oracle_sql, name=""):
+    """Row by row, in the oracle's ORDER BY order — for results whose
+    order is part of the contract (`assert_matches_oracle` sorts)."""
+    rel = duck_con.sql(oracle_sql)
+    assert sorted(spark_df.columns) == sorted(rel.columns), name
+    pick = [rel.columns.index(c) for c in spark_df.columns]
+    want = [tuple(_norm_cell(r[i]) for i in pick) for r in rel.fetchall()]
+    got = [tuple(_norm_cell(v) for v in r) for r in spark_df.collect()]
+    assert got == want, f"{name}: rows differ or are out of order"

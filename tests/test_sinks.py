@@ -80,6 +80,57 @@ def test_merge_upsert_recovers_from_crashed_swap(spark, tmpdir_repo):
     assert got == {"s1", "s2"}
 
 
+def _jobs_in_group(spark, fn):
+    """(fn(), number of Spark jobs fn ran), counted by statusTracker in
+    a fresh job group."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # the tracker is async
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_merge_upsert_empty_batch_is_a_noop(spark, tmpdir_repo):
+    p = os.path.join(tmpdir_repo, "stations.parquet")
+    empty = _stations(spark, [])
+
+    def merge(df):
+        return sinks.merge_upsert(spark, df, p, ["station_id"], "last_updated")
+
+    # first-ever call: an empty table appears, so readers of the path
+    # (gbfs.ingest_once, weather) find it even after an empty feed
+    assert merge(empty) == 0
+    assert spark.read.parquet(p).count() == 0
+    assert not os.path.exists(p + ".staging")
+    assert merge(_stations(spark, [("s1", "Alpha", 10, 100)])) == 1
+    # later call: same count, same rows
+    assert merge(empty) == 1
+    assert [tuple(r) for r in spark.read.parquet(p).collect()] == [
+        ("s1", "Alpha", 10, 100)
+    ]
+
+
+def test_merge_upsert_runs_at_most_two_jobs(spark, tmpdir_repo):
+    """The row count rides the write (observed metrics): no re-read
+    of the staged table."""
+    p = os.path.join(tmpdir_repo, "stations.parquet")
+    for rows, want in (
+        ([("s1", "Alpha", 10, 100)], 1),
+        ([("s1", "New", 12, 200), ("s2", "Beta", 20, 100)], 2),
+        ([], 2),
+    ):
+        n, jobs = _jobs_in_group(
+            spark,
+            lambda: sinks.merge_upsert(
+                spark, _stations(spark, rows), p, ["station_id"],
+                "last_updated"),
+        )
+        assert n == want and jobs <= 2, (rows, n, jobs)
+
 class TestShuffledShards:
     def test_deterministic_and_lossless(self, spark, tmp_path):
         from bike_analyzer_spark.sources import sinks

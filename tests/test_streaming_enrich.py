@@ -53,6 +53,44 @@ def test_foreach_batch_upsert_keeps_latest(spark, tdir):
     assert rows["s1"] == (6, t0 + dt.timedelta(minutes=10))
     assert rows["s2"][0] == 7 and len(rows) == 2
 
+def test_poll_drain_runs_at_most_two_jobs(spark, tdir):
+    """One landed poll = one micro-batch = one merge_upsert; its jobs
+    run in the stream's job group (the run id), read by statusTracker."""
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    class RunIds(StreamingQueryListener):
+        def __init__(self):
+            self.ids = []
+
+        def onQueryStarted(self, event):
+            self.ids.append(str(event.runId))
+
+        def onQueryProgress(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    landing = os.path.join(tdir, "landing")
+    target = os.path.join(tdir, "latest.parquet")
+    t0 = dt.datetime(2025, 9, 4, 15, 0, 0)
+    runs = RunIds()
+    spark.streams.addListener(runs)
+    try:
+        for i in range(2):
+            _status_batch(spark, t0 + dt.timedelta(minutes=5 * i), 4 + i) \
+                .coalesce(1).write.mode("append").parquet(landing)
+            streaming.foreach_batch_upsert(
+                spark, streaming.status_stream(spark, landing),
+                target, os.path.join(tdir, "ckpt"))
+    finally:
+        spark.streams.removeListener(runs)
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = spark.sparkContext.statusTracker()
+    jobs = [len(tracker.getJobIdsForGroup(r)) for r in runs.ids]
+    assert len(jobs) == 2 and all(0 < j <= 2 for j in jobs), jobs
+    assert spark.read.parquet(target).count() == 2
+
 def _fake_geocoder(lat, lon):
     if lat is None or lat < -40:
         raise ValueError("boom")
