@@ -1,45 +1,18 @@
-"""Benchmark harness — times the headline query corpus. The FINAL
-stdout line is a COMPACT JSON summary the driver records as
-BENCH_r{N}.json; per-query detail goes on an EARLIER stdout line and
-into the BENCH_DETAIL.json sidecar.
+"""Corpus-wide timing CLI: per-query p50 wall time of every registered
+query, each forced end to end through the `noop` sink (session start
+excluded), plus one rep per query at a secondary scale factor.
 
-The driver captures a fixed-size stdout *tail*: round 1 and round 3
-both lost their perf record because a single oversized JSON line (two
-60-entry per-query maps) outgrew the tail and its head — including the
-headline "value" — was truncated. Hence the split emission: the last
-line must stay small no matter how many queries the corpus grows to.
-
-Usage: python bench.py [--adopt]
-       By default per-query detail is written to the UNTRACKED
-       BENCH_DETAIL.tmp.json sidecar, so driver/CI runs never dirty
-       the committed BENCH_DETAIL.json artifact (rounds 8-10 each
-       ended with the clean committed detail overwritten by a
-       contended driver run). Pass --adopt to replace the committed
-       BENCH_DETAIL.json — refused (detail still goes to the tmp
-       path) when the start loadavg is >= ADOPT_LOADAVG_MAX (1.0,
-       stricter than the summary `clean` flag's 4.0) or the
-       floor-inversion tell fired, so only idle-window runs can
-       become the artifact. A successful adopt also rewrites the
-       tmp sidecar so it never lags the committed file.
+Usage: python bench.py
 Env:   SPARK_GRAFT_SF_DIR            (default /root/testdata/sf0.1)
        SPARK_GRAFT_SF_DIR_SECONDARY  (default /root/testdata/sf0.01;
                                       "" disables the secondary pass)
        SPARK_GRAFT_CPUS              (default 32)
        SPARK_GRAFT_BENCH_REPS        (default 3)
 
-Each query is forced end-to-end through the `noop` sink: the full plan
-executes on executors with zero driver materialization, so a query
-returning 600k rows is timed as fairly as one returning 1. Times
-exclude session startup (fixed overhead, not query throughput).
-
-Methodology (round 3, per round-2 verdict): each query runs REPS times
-and reports the per-query p50, damping JVM warm-up/JIT noise; rep 1 of
-each query still pays its own planning + first-touch cost, so the p50
-of 3 is dominated by warmed execution. A secondary scale factor runs
-the same corpus so round-over-round comparisons see a scaling slope
-(sec vs sf), not a single point. Headline `value`/`queries`/`sf` keep
-their round-1/2 meaning (primary SF) so prior BENCH_r{N}.json files
-remain directly comparable.
+Per-query detail goes on the second-to-last stdout line and into the
+untracked sidecar BENCH_DETAIL.tmp.c{SPARK_GRAFT_CPUS}.json; the LAST
+line is a compact JSON summary, so a fixed-size stdout tail always
+holds it whole. The benchmark of record is `python3 perfbench/run.py`.
 """
 
 from __future__ import annotations
@@ -57,39 +30,6 @@ SF_DIR_SECONDARY = os.environ.get(
 )
 REPS = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")))
 
-#: --adopt refuses runs that start above this 1-min loadavg. The
-#: summary `clean` flag keeps its looser < 4.0 provenance meaning;
-#: adoption of the committed BENCH_DETAIL.json artifact demands a
-#: genuinely idle start (r11: a loadavg-3.95 "clean" run measured a
-#: uniform 1.28x median per-query inflation vs the idle artifact).
-ADOPT_LOADAVG_MAX = 1.0
-
-
-def adoptable(
-    load_start: float,
-    floor_inverted: bool,
-    sf: float = 0.1,
-    secondary_sf: "float | None" = 0.01,
-) -> bool:
-    """Gate for replacing the committed BENCH_DETAIL.json artifact.
-
-    Stricter than the summary ``clean`` flag on purpose: adoption
-    demands an idle start (< ADOPT_LOADAVG_MAX) AND no mid-run
-    floor inversion; ``clean`` (< 4.0) remains only a coarse
-    provenance marker on the summary line. The artifact is BY
-    DEFINITION the sf0.1 primary + sf0.01 secondary sweep
-    (tests/test_scaling_pin.py and scripts/scaling_report.py read
-    it as such, and the pin silently SKIPS on a malformed artifact
-    rather than failing), so a debugging run at another SF is
-    refused outright.
-    """
-    return (
-        sf == 0.1
-        and secondary_sf == 0.01
-        and load_start < ADOPT_LOADAVG_MAX
-        and not floor_inverted
-    )
-
 
 def _sf_from_dir(path: str) -> float:
     m = re.search(r"sf([0-9.]+)", path)
@@ -99,13 +39,10 @@ def _sf_from_dir(path: str) -> float:
 def _cpu_jiffies() -> "tuple[int, int] | None":
     """(steal, total) jiffies from /proc/stat, or None off-Linux.
 
-    Steal is the tell loadavg cannot see: this sandbox is a VM on a
-    shared host, and when a NEIGHBOR tenant runs hot the hypervisor
-    withholds our vCPUs — r12 measured runs starting at loadavg 0.1
-    that still carried 2-8x localized per-query inflation. The
-    summary records the run's steal share so a judge (and the adopt
-    workflow) can tell hypervisor pressure from a genuinely clean
-    window."""
+    Steal is what loadavg cannot see: on a VM whose host runs other
+    tenants hot, the hypervisor withholds vCPUs and a run that starts
+    at a low loadavg can still be inflated. The summary records the
+    run's steal share."""
     try:
         with open("/proc/stat") as f:
             parts = f.readline().split()
@@ -180,9 +117,8 @@ def main() -> int:
 
     import __spark_entry__ as entry_mod
 
-    # Provenance: a loaded machine (pytest, another Spark job) inflates
-    # per-query numbers 20-30 %; record 1-min load at start so a judge
-    # can tell a contended run from a clean one.
+    # Provenance: a loaded machine inflates per-query numbers, so the
+    # summary records the 1-min load and the steal share of the run.
     load_start = round(os.getloadavg()[0], 2)
     jiffies_start = _cpu_jiffies()
 
@@ -190,7 +126,6 @@ def main() -> int:
     qs = entry_mod.queries()
 
     timings, errors = _run_corpus(spark, qs, SF_DIR, REPS)
-    total = round(sum(timings.values()), 3)
     detail = {
         "kind": "bench_detail",
         "sf": _sf_from_dir(SF_DIR),
@@ -201,7 +136,7 @@ def main() -> int:
 
     summary = {
         "metric": "query_corpus_wall_time",
-        "value": total,
+        "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "sf": _sf_from_dir(SF_DIR),
         "n_queries": len(timings),
@@ -217,8 +152,6 @@ def main() -> int:
         and os.path.isdir(SF_DIR_SECONDARY)
         and os.path.realpath(SF_DIR_SECONDARY) != os.path.realpath(SF_DIR)
     ):
-        # single rep: the secondary SF exists for the scaling slope,
-        # not for precision — keeps total bench wall time bounded
         sec_timings, sec_errors = _run_corpus(spark, qs, SF_DIR_SECONDARY, 1)
         detail["secondary"] = {
             "sf": _sf_from_dir(SF_DIR_SECONDARY),
@@ -231,35 +164,15 @@ def main() -> int:
         summary["secondary_value"] = detail["secondary"]["value"]
         summary["secondary_sf"] = detail["secondary"]["sf"]
 
-    # Contention is not constant over a ~10-minute run: r10 saw a
-    # start-quiet host (loadavg 0.02) where the sf0.01 secondary
-    # still came out SLOWER than the sf0.1 primary — the per-query
-    # scheduling floor itself rose mid-run (host CPU-quota pressure
-    # this container's loadavg can't see). Record the end-of-run
-    # loadavg and the secondary/primary inversion tell so a judge
-    # can spot such runs; `clean` keeps its start-only meaning (the
-    # end value may include our own still-decaying 1-min average).
-    # Rep asymmetry caveat (r10 advice): the secondary pass is
-    # 1-rep, so each of its per-query times INCLUDES planning +
-    # first-touch I/O, while the primary is a p50-of-REPS dominated
-    # by warmed execution. That asymmetry alone inflates the
-    # secondary sum by roughly the corpus's aggregate planning cost
-    # (~15-20 s at 220+ queries), so `floor_inverted` is a
-    # conservative tell: at a 10x SF gap a genuinely quiet host
-    # keeps the sf0.01 secondary well below the sf0.1 primary even
-    # with the planning surcharge; an inversion therefore still
-    # signals a mid-run floor rise, but the MARGIN of an inversion
-    # is not interpretable as pure contention.
     summary["loadavg_end"] = round(os.getloadavg()[0], 2)
     jiffies_end = _cpu_jiffies()
     if jiffies_start and jiffies_end:
         dsteal = jiffies_end[0] - jiffies_start[0]
         dtotal = jiffies_end[1] - jiffies_start[1]
         if dtotal > 0:
-            # share of this VM's whole-run CPU capacity withheld by
-            # the hypervisor (neighbor-tenant pressure); ~0.1-0.5 %
-            # on a quiet host, several % across a contention window
             summary["steal_pct"] = round(100.0 * dsteal / dtotal, 2)
+    # A smaller secondary SF that came out SLOWER than the primary
+    # means the per-query scheduling floor rose mid-run.
     if "secondary_value" in summary and summary["sf"] > summary.get(
         "secondary_sf", summary["sf"]
     ):
@@ -267,66 +180,20 @@ def main() -> int:
             summary["secondary_value"] > summary["value"]
         )
 
-    # Per-query maps: sidecar file + an EARLY stdout line (truncatable).
-    # Default target is the UNTRACKED .tmp sidecar; the committed
-    # BENCH_DETAIL.json (which tests/test_scaling_pin.py and the
-    # round-over-round comparisons read) only changes under an
-    # explicit --adopt on an IDLE-window run. Adoption is stricter
-    # than the summary `clean` flag: r11 proved a loadavg-3.95 run
-    # carries clean:true while executing at a uniform 1.28x median
-    # per-query inflation (host tenancy), so `clean` (< 4.0) stays a
-    # coarse provenance flag while --adopt demands loadavg_start <
-    # ADOPT_LOADAVG_MAX and no floor inversion.
-    repo = os.path.dirname(os.path.abspath(__file__))
-    adopt = "--adopt" in sys.argv[1:]
-    can_adopt = adoptable(
-        load_start,
-        summary.get("floor_inverted", False),
-        sf=summary["sf"],
-        secondary_sf=summary.get("secondary_sf"),
-    )
-    if adopt and not can_adopt:
-        print(
-            "bench: --adopt refused (sf=%s/secondary=%s need 0.1/0.01; "
-            "loadavg_start=%s vs < %s required; floor_inverted=%s); "
-            "detail written to BENCH_DETAIL.tmp.json only" % (
-                summary["sf"],
-                summary.get("secondary_sf"),
-                load_start,
-                ADOPT_LOADAVG_MAX,
-                summary.get("floor_inverted"),
-            ),
-            file=sys.stderr,
-        )
-    adopted = adopt and can_adopt
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     sidecar = os.path.join(
-        repo, "BENCH_DETAIL.json" if adopted else "BENCH_DETAIL.tmp.json"
+        os.path.dirname(os.path.abspath(__file__)),
+        f"BENCH_DETAIL.tmp.c{cpus}.json",
     )
-    summary["detail_file"] = os.path.basename(sidecar)
     with open(sidecar, "w") as f:
         json.dump(detail, f, indent=1, sort_keys=True)
-    # Per-core-count sidecar (r13): the driver benches the SAME corpus
-    # at two core counts to measure scaling, and both runs previously
-    # wrote the one tmp path — the second overwrote the first, so no
-    # per-query join across core counts was ever possible (PERF_r12's
-    # scaling.per_query came back empty). The cpu-suffixed copy is
-    # additive provenance; detail_file and the final summary line are
-    # unchanged.
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    cpu_sidecar = os.path.join(repo, f"BENCH_DETAIL.tmp.c{cpus}.json")
-    with open(cpu_sidecar, "w") as f:
-        json.dump(detail, f, indent=1, sort_keys=True)
-    summary["detail_file_cpus"] = os.path.basename(cpu_sidecar)
-    if adopted:
-        # Keep the tmp sidecar in lockstep: a stale tmp from an older
-        # run must never outlive an adoption, or the documented
-        # "cp the best clean tmp" workflow could resurrect it.
-        with open(os.path.join(repo, "BENCH_DETAIL.tmp.json"), "w") as f:
-            json.dump(detail, f, indent=1, sort_keys=True)
+    summary["detail_file"] = summary["detail_file_cpus"] = os.path.basename(
+        sidecar
+    )
     print(json.dumps(detail))
     sys.stdout.flush()
 
-    # LAST line: compact summary only — this is what the driver parses.
+    # LAST line: compact summary only.
     print(json.dumps(summary))
     return 0
 

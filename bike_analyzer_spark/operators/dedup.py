@@ -533,6 +533,21 @@ def _incr_store_index(spark: SparkSession, sf_dir: str):
     )
 
 
+def shard_store_candidates(shard: DataFrame, store: DataFrame) -> DataFrame:
+    """(a, b) pairs of a shard doc and a store doc that agree on ALL
+    rows of any band: the band join of two (doc_id, band, sig) tables."""
+    l, r = shard.alias("l"), store.alias("r")
+    return (
+        l.join(
+            r,
+            (F.col("l.band") == F.col("r.band"))
+            & (F.col("l.sig") == F.col("r.sig")),
+        )
+        .select(F.col("l.doc_id").alias("a"), F.col("r.doc_id").alias("b"))
+        .distinct()
+    )
+
+
 def dedup_incr_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental near-dedup — the growing-corpus admission check: an
     arriving shard (doc_id % 5 == 0) is banded against the STORE's
@@ -570,16 +585,7 @@ def dedup_incr_near(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the doc count from table metadata — no count() job
         n_keys = -(-n_docs // INCR_NEW_MOD) * LSH_BANDS
         store = _bloom_prune(spark, store, shard, n_keys)
-    l, r = shard.alias("l"), store.alias("r")
-    cands = (
-        l.join(
-            r,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.sig") == F.col("r.sig")),
-        )
-        .select(F.col("l.doc_id").alias("a"), F.col("r.doc_id").alias("b"))
-        .distinct()
-    )
+    cands = shard_store_candidates(shard, store)
     scored = _jaccard_two_sided(
         cands, shard_ds, store_ds, JACCARD_FLOOR, sizes_b=store_sizes
     )
