@@ -175,7 +175,8 @@ def entity_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     (capped blocks, quadratic only within a block); the clustering
     inherits connected_components' O(diameter) label propagation
     with per-round checkpoints. Entity chains are short (matches are
-    near-identical strings), so convergence is fast by construction.
+    near-identical strings): one round at every testdata SF, and the
+    loop raises rather than split an entity past its MAX_ITER bound.
     """
     from .graph import connected_components
 
@@ -194,6 +195,7 @@ def entity_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.levenshtein("pa", "pb") <= MATCH_DIST)
         .select("a", "b")
     )
+    # converges: 1 round at every testdata SF; raises past MAX_ITER
     cc = connected_components(edges)
     return (
         cc.groupBy("component")
@@ -278,6 +280,7 @@ def entity_golden_record(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.levenshtein("pa", "pb") <= MATCH_DIST)
         .select("a", "b")
     )
+    # same edges as entity_clusters, so the same 1-round convergence
     members = connected_components(edges).join(
         load(spark, sf_dir, "documents").select(
             F.col("doc_id").alias("id"),

@@ -13,10 +13,12 @@ convergence detection. Each iteration:
 
 converging in O(diameter) iterations. `localCheckpoint` truncates
 lineage each round so plans don't grow with iterations. At 100 TB
-scale the same loop holds (labels/messages shuffle on vertex id);
-for adversarial diameters the known refinement is the large-star/
-small-star algorithm (Kiveris et al.), which this API could swap in
-without changing callers.
+scale the same loop holds (labels/messages shuffle on vertex id).
+Every caller's diameter is bounded below its `max_iter` (the reason
+is a comment at each call site); past the bound the loop raises.
+For adversarial diameters the known refinement is the large-star/
+small-star algorithm (Kiveris et al., O(log^2 n) rounds), which this
+API could swap in without changing callers.
 
 Determinism: labels are vertex-id minima — no tie ambiguity at all.
 """
@@ -86,113 +88,7 @@ def connected_components(edges: DataFrame, max_iter: int = MAX_ITER) -> DataFram
     raise RuntimeError(
         f"connected_components did not converge in {max_iter} iterations "
         f"({changed} labels still changing); raise max_iter (diameter "
-        "bound) or switch to a large-star/small-star variant"
-    )
-
-
-def _canon(edges: DataFrame) -> DataFrame:
-    """Undirected edge set in canonical (lo, hi) form, self-loops and
-    duplicates dropped."""
-    return (
-        edges.select(
-            F.least("a", "b").alias("lo"), F.greatest("a", "b").alias("hi")
-        )
-        .filter(F.col("lo") != F.col("hi"))
-        .distinct()
-    )
-
-
-def connected_components_lss(
-    edges: DataFrame, max_iter: int = MAX_ITER
-) -> DataFrame:
-    """Connected components by alternating large-star / small-star
-    (Kiveris et al., "Connected Components in MapReduce and Beyond") —
-    the adversarial-diameter-safe variant: converges in O(log^2 n)
-    rounds regardless of graph diameter, where plain min-label
-    propagation needs O(diameter) rounds (a 10^6-hop chain at 100 TB
-    would never finish). Same output contract as
-    `connected_components`; the two cross-validate by test.
-
-    large-star: every node links its LARGER neighbors to the minimum
-    of its neighborhood (incl. itself); small-star does the same for
-    its not-larger neighbors. Both only ever shuffle on vertex id and
-    only shrink/redirect edges — no fan-out. Convergence = the edge
-    multiset is stable (count + order-insensitive hash, one tiny
-    aggregate per round on the already-checkpointed set)."""
-    e = _canon(edges).localCheckpoint()
-
-    def _star(e: DataFrame, large: bool) -> DataFrame:
-        # Neighborhoods in both directions: (u, v) = u sees v.
-        # The input may carry DUPLICATE (lo, hi) rows (see below) —
-        # harmless: m is a min over neighbors, so multiplicity can't
-        # change it, and the round's final _canon dedups the output.
-        bidir = e.select(
-            F.col("lo").alias("u"), F.col("hi").alias("v")
-        ).union(e.select(F.col("hi").alias("u"), F.col("lo").alias("v")))
-        m = bidir.groupBy("u").agg(
-            F.least(F.min("v"), F.first("u")).alias("m")
-        )
-        linked = bidir.filter(
-            F.col("v") > F.col("u") if large else F.col("v") < F.col("u")
-        ).join(m, "u")
-        # large-star: (v, m(u)) for v > u ; small-star additionally
-        # re-links u itself to m(u)
-        out = linked.select(F.col("v").alias("a"), F.col("m").alias("b"))
-        if not large:
-            out = out.union(
-                m.select(F.col("u").alias("a"), F.col("m").alias("b"))
-            )
-        # canonical ORIENTATION only — no distinct: deduplicating
-        # between the two half-rounds spent a full extra shuffle per
-        # round, and the small-star pass is duplicate-tolerant (min
-        # aggregates); the caller dedups once per round instead.
-        return out.select(
-            F.least("a", "b").alias("lo"), F.greatest("a", "b").alias("hi")
-        ).filter(F.col("lo") != F.col("hi"))
-
-    def _sig(e: DataFrame) -> tuple:
-        # count + XOR of per-edge hashes: order-insensitive, cannot
-        # overflow (sum would, under ANSI). Probabilistic (~2^-64
-        # collision on equal-count sets) — so a signature match is
-        # only a PRE-check, confirmed exactly below before returning.
-        return tuple(
-            e.agg(
-                F.count(F.lit(1)),
-                F.coalesce(
-                    F.expr("bit_xor(xxhash64(lo, hi))"), F.lit(0)
-                ),
-            ).first()
-        )
-
-    sig = _sig(e)
-    for _ in range(max_iter):
-        prev = e
-        # LAZY checkpoint: the signature aggregate below materializes
-        # it — one job per round instead of checkpoint-then-aggregate
-        # ONE distinct per round (the two _star passes only orient):
-        # the signature and the stable-star convergence shape both
-        # need the canonical edge SET at round boundaries
-        e = _star(_star(e, large=True), large=False).distinct().localCheckpoint(
-            eager=False
-        )
-        new_sig = _sig(e)
-        # exact confirmation: equal counts (from the signature) + empty
-        # new\prev ⟹ set equality. Runs at most once per convergence —
-        # the per-round cost stays one tiny aggregate — and turns the
-        # 2^-64 XOR-collision false-stop into a continued iteration.
-        if new_sig == sig and e.exceptAll(prev).limit(1).count() == 0:
-            # stable star graph: every edge is (root, member)
-            members = e.select(
-                F.col("hi").alias("id"), F.col("lo").alias("component")
-            )
-            roots = e.select(F.col("lo").alias("id")).distinct().withColumn(
-                "component", F.col("id")
-            )
-            return members.union(roots)
-        sig = new_sig
-    raise RuntimeError(
-        f"connected_components_lss did not converge in {max_iter} rounds "
-        "(expected O(log^2 n)); the edge signature is still moving"
+        "bound) or swap in large-star/small-star (module docstring)"
     )
 
 
@@ -204,6 +100,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .dedup import dedup_ngram_jaccard
 
     edges = dedup_ngram_jaccard(spark, sf_dir).select("a", "b")
+    # converges: limit(20) pairs -> diameter <= 20 < MAX_ITER
     comps = connected_components(edges)
     return comps.select(
         F.col("component").alias("cluster_root"),
@@ -335,25 +232,10 @@ def od_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def dedup_clusters_lss(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """`dedup_clusters` computed by the large-star/small-star CC
-    variant instead of min-label propagation — same answer (shared
-    DuckDB oracle), diameter-independent round count: the form that
-    survives adversarial graphs at 100 TB."""
-    from .dedup import dedup_ngram_jaccard
-
-    edges = dedup_ngram_jaccard(spark, sf_dir).select("a", "b")
-    comps = connected_components_lss(edges)
-    return comps.select(
-        F.col("component").alias("cluster_root"),
-        F.col("id").alias("doc_id"),
-        (F.col("id") == F.col("component")).alias("is_kept"),
-    ).orderBy("cluster_root", "doc_id")
-
-
 QUERIES = {
     "dedup_clusters": dedup_clusters,
-    "dedup_clusters_lss": dedup_clusters_lss,
+    # name kept so the registry is unchanged; same query and oracle
+    "dedup_clusters_lss": dedup_clusters,
     "od_pagerank": od_pagerank,
 }
 
@@ -451,7 +333,6 @@ def _od_pagerank_oracle(damping: float = 0.85, iterations: int = 10) -> str:
 
 ORACLES: dict[str, str] = {
     "dedup_clusters": _dedup_clusters_oracle(),
-    # same answer by construction — the lss variant shares the oracle
     "dedup_clusters_lss": _dedup_clusters_oracle(),
     "od_pagerank": _od_pagerank_oracle(),
 }
@@ -750,8 +631,8 @@ def od_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     distribution: iteratively peel nodes with degree < k until the
     fixpoint; emit the surviving core's per-node degree.
 
-    The fourth iterative graph algorithm (CC, LSS-CC, PageRank,
-    BFS): peeling is the one whose per-round work SHRINKS — each
+    The fourth iterative graph algorithm (CC, PageRank, BFS):
+    peeling is the one whose per-round work SHRINKS — each
     round is one degree aggregate + two semi joins against the
     survivors, all on the previous round's (checkpointed) edge set.
     The loop runs a FIXED KCORE_MAX_ROUNDS (no per-round driver
@@ -967,19 +848,14 @@ def od_shortest_path(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("aw") + F.col("bw")).alias("w"),
         )
     )
-    # repartition on eo BEFORE the checkpoint: the per-round relax
-    # join reads edges BY eo twelve times, and the groupBy leaves the
-    # checkpoint hash(eo, ed)-partitioned — one exchange here removes
-    # the per-round edges re-exchange (r13 A/B: base p50 3.78-4.39 s,
-    # +eo-partitioning & round-pair checkpoints 3.35-3.54 s at sf0.1;
-    # od_pagerank's r6 rejection of trans pre-partitioning does not
-    # transfer because edges here is checkpoint-materialized once and
-    # re-read, not re-planned under AQE each round)
+    # no repartition("eo") before the checkpoint: the checkpointed
+    # scan reports UnknownPartitioning, so each round's relax join
+    # re-exchanges edges on eo either way; a pre-repartition only
+    # added one REPARTITION_BY_COL exchange and one job
     edges = (
         edges.unionAll(two_hop)
         .groupBy("eo", "ed")
         .agg(F.min("w").alias("w"))
-        .repartition("eo")
         .localCheckpoint(eager=False)
     )
     dist = (

@@ -56,22 +56,10 @@ FLOW_SCHEMA = "bucket_s bigint, o bigint, d bigint, flow bigint"
 
 _EARTH_R_M = 6371000.0
 
-#: Partition-count contract for the greedy kernel (round-3): the
-#: shuffle before mapInPandas distributes whole BUCKETS, and each
-#: task's memory is (buckets-per-task x bucket size), where a bucket
-#: is at most |stations| rows after the A7 collapse. At 100 TB this
-#: knob is sized to the cluster (e.g. 2-3x total cores) instead of
-#: inheriting spark.sql.shuffle.partitions, which is tuned for generic
-#: agg/join exchanges — 0/unset keeps the session default.
-OD_KERNEL_PARTITIONS = int(os.environ.get("SPARK_GRAFT_OD_PARTITIONS", "0"))
-
-
 def _kernel_repartition(df: DataFrame) -> DataFrame:
-    """Hash-distribute buckets to kernel tasks under the explicit
-    partition-count contract. Buckets never split across tasks (the
-    kernel's correctness invariant); the count bounds per-task input."""
-    if OD_KERNEL_PARTITIONS > 0:
-        return df.repartition(OD_KERNEL_PARTITIONS, "bucket_s")
+    """Hash-distribute buckets to kernel tasks. Buckets never split
+    across tasks (the kernel's correctness invariant), so per-task
+    input is bounded by the buckets each task receives."""
     return df.repartition("bucket_s")
 
 
@@ -738,12 +726,14 @@ def geo_dbscan_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ab_test_chi2/od_kcore discipline). Everything is exact
     integers; no score arithmetic exists at all.
 
-    Scale shape: flows roll up to the <=100x100 cell lattice (the
+    Scale shape: flows roll up to the <=10x10 cell lattice (station
+    keys are non-negative, so i and j are digits; the
     corpus-sized work is the persisted flows kernel); density,
     adjacency (a bounded x8 explode + one equi join on the cell
     key), and the CC loop all run on the LATTICE-sized frame —
-    min-label propagation over <=10^4 vertices with single-digit
-    diameter. The report is cluster-count-sized.
+    min-label propagation over <=100 vertices, so the diameter is
+    below 100 and `max_iter=100` converges by construction (8-9
+    rounds measured). The report is cluster-count-sized.
     """
     from .graph import connected_components
 
@@ -801,7 +791,8 @@ def geo_dbscan_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("a") < F.col("b"))
         .select("a", "b")
     )
-    comp = connected_components(edges)
+    # converges: <=100 lattice cells -> diameter < 100 = max_iter
+    comp = connected_components(edges, max_iter=100)
     labeled = dense.join(
         comp.withColumnRenamed("id", "cell"), "cell", "left"
     ).withColumn(

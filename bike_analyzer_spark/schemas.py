@@ -3,7 +3,7 @@
 Two families:
 
 1. Bike-domain tables, normative DDL at reference sql/schema.sql:3-46
-   (stations / station_status / weather_hourly) re-typed Spark-natively
+   (stations / station_status) re-typed Spark-natively
    per SURVEY.md §1.2 — booleans as BooleanType, epochs and ISO strings
    as TimestampType, the comma-joined `rental_methods` as
    ArrayType(String), `vehicles_json` as ArrayType(Struct).
@@ -64,55 +64,6 @@ STATION_STATUS = T.StructType(
         T.StructField("last_reported", T.TimestampType()),
         T.StructField("scraped_at", T.TimestampType(), nullable=False),
         T.StructField("vehicles", VEHICLE_TYPE),
-    ]
-)
-
-# reference sql/schema.sql:35-46; column list from config.py:10-22
-WEATHER_HOURLY = T.StructType(
-    [
-        T.StructField("time", T.TimestampType(), nullable=False),
-        T.StructField("temperature_2m", T.DoubleType()),
-        T.StructField("precipitation", T.DoubleType()),
-        T.StructField("rain", T.DoubleType()),
-        T.StructField("showers", T.DoubleType()),
-        T.StructField("snowfall", T.DoubleType()),
-        T.StructField("cloudcover", T.DoubleType()),
-        T.StructField("windspeed_10m", T.DoubleType()),
-        T.StructField("relative_humidity_2m", T.DoubleType()),
-        T.StructField("weathercode", T.IntegerType()),
-    ]
-)
-
-# GBFS station_information payload fields consumed at etl_gbfs.py:96-109
-GBFS_STATION_INFO = T.StructType(
-    [
-        T.StructField("station_id", T.StringType()),
-        T.StructField("name", T.StringType()),
-        T.StructField("lat", T.DoubleType()),
-        T.StructField("lon", T.DoubleType()),
-        T.StructField("capacity", T.IntegerType()),
-        T.StructField("address", T.StringType()),
-        T.StructField("rental_methods", T.ArrayType(T.StringType())),
-        T.StructField("is_virtual_station", T.BooleanType()),
-        T.StructField("external_id", T.StringType()),
-        T.StructField("short_name", T.StringType()),
-        T.StructField("region_id", T.StringType()),
-    ]
-)
-
-# GBFS station_status payload fields consumed at etl_gbfs.py:138-152
-GBFS_STATION_STATUS = T.StructType(
-    [
-        T.StructField("station_id", T.StringType()),
-        T.StructField("num_bikes_available", T.IntegerType()),
-        T.StructField("num_bikes_disabled", T.IntegerType()),
-        T.StructField("num_docks_available", T.IntegerType()),
-        T.StructField("num_docks_disabled", T.IntegerType()),
-        T.StructField("is_installed", T.BooleanType()),
-        T.StructField("is_renting", T.BooleanType()),
-        T.StructField("is_returning", T.BooleanType()),
-        T.StructField("last_reported", T.LongType()),
-        T.StructField("vehicle_types_available", VEHICLE_TYPE),
     ]
 )
 

@@ -23,8 +23,6 @@ from pyspark.sql import types as T
 from ..schemas import TABLE_NAMES, TESTDATA
 from ..session import configure
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 _REPO_ROOT = os.path.dirname(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 )
@@ -32,9 +30,6 @@ _REPO_ROOT = os.path.dirname(
 PARTITIONED_CACHE_DIR = os.path.join(
     _REPO_ROOT, "spark-warehouse", "events_by_date"
 )
-
-
-_CONFIGURED_FLAG = "spark.bikeAnalyzer.configured"
 
 #: Bump whenever the events loader semantics change: the value is part
 #: of the partitioned-cache fingerprint, so a loader fix invalidates
@@ -222,9 +217,7 @@ def load_events_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
     avg/sum-of-double corpus queries do NOT — they must keep the
     1-file `load` read whose scan order matches the sequential
     DuckDB oracle (see the SPREAD_TABLES note above)."""
-    if spark.conf.get(_CONFIGURED_FLAG, None) != "true":
-        configure(spark)
-        spark.conf.set(_CONFIGURED_FLAG, "true")
+    configure(spark)
     return _load_spread(spark, sf_dir, "events")
 
 
@@ -247,17 +240,11 @@ def table_rows(sf_dir: str, name: str) -> int:
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one testdata table with its pinned schema.
-
-    `configure` mutates session-wide conf (timezone, AQE, Arrow,
-    nanosAsLong), so it runs once per session — guarded by a conf
-    sentinel — instead of on every table read.
-    """
+    """Load one testdata table with its pinned schema (the first read
+    in a session applies `configure`)."""
     if name not in TESTDATA:
         raise KeyError(f"unknown table {name!r}; known: {TABLE_NAMES}")
-    if spark.conf.get(_CONFIGURED_FLAG, None) != "true":
-        configure(spark)
-        spark.conf.set(_CONFIGURED_FLAG, "true")
+    configure(spark)
     if name in SPREAD_TABLES:
         return _load_spread(spark, sf_dir, name)
     # Pinned schema (never inferSchema): plans stay stable across scale
@@ -359,9 +346,7 @@ def events_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     read through this so their scans prune to a handful of partition
     dirs via PartitionFilters — the default plan at scale, not a demo.
     """
-    if spark.conf.get(_CONFIGURED_FLAG, None) != "true":
-        configure(spark)
-        spark.conf.set(_CONFIGURED_FLAG, "true")
+    configure(spark)
     path = events_partitioned_path(sf_dir)
     marker = os.path.join(path, "_FINGERPRINT.json")
     st = os.stat(os.path.join(sf_dir, "events.parquet"))

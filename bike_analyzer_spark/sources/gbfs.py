@@ -79,10 +79,6 @@ def pick_feed_url(feeds: list[dict[str, Any]], feed_name: str) -> str | None:
     return None
 
 
-def _get(st: dict[str, Any], key: str):
-    return st.get(key)
-
-
 def station_rows(si: dict[str, Any]) -> list[tuple]:
     """station_information payload -> typed row tuples (STATIONS
     order). Pure function shared by the driver-side `stations_df`

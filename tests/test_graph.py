@@ -31,9 +31,14 @@ def _union_find(edges):
         union(a, b)
     return {x: find(x) for x in parent}
 
-def test_components_synthetic(spark):
+@pytest.mark.parametrize("edges", [
     # chain 1-2-3-4, pair 10-11, triangle 20-21-22 + bridge 22-23
-    edges = [(1,2),(2,3),(3,4),(10,11),(20,21),(21,22),(20,22),(22,23)]
+    [(1,2),(2,3),(3,4),(10,11),(20,21),(21,22),(20,22),(22,23)],
+    # deterministic pseudo-random graph with several components
+    [(i, (i * 7 + 3) % 50 + (i % 5) * 50) for i in range(0, 250, 3)
+     if i != (i * 7 + 3) % 50 + (i % 5) * 50],
+], ids=["small", "random"])
+def test_components_synthetic(spark, edges):
     df = spark.createDataFrame(edges, "a long, b long")
     got = {r.id: r.component for r in graph.connected_components(df).collect()}
     assert got == _union_find(edges)
@@ -107,44 +112,15 @@ def test_pagerank_sums_to_one(spark):
     assert abs(total - 1.0) < 1e-6
 
 
-def test_lss_converges_on_long_chain(spark):
-    """A 200-node path: min-label propagation needs 200 rounds (raises
-    at MAX_ITER=25 by design); large-star/small-star collapses it in
-    O(log^2 n) rounds — the adversarial-diameter case it exists for."""
-    import pytest as _pytest
-
+def test_connected_components_raises_on_long_chain(spark):
+    """A 200-node path needs ~200 label-propagation rounds: past
+    max_iter the loop fails loudly instead of returning split
+    components."""
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(200)], "a long, b long"
     )
-    comps = {
-        r.id: r.component
-        for r in graph.connected_components_lss(chain).collect()
-    }
-    assert len(comps) == 201 and set(comps.values()) == {0}
-    with _pytest.raises(RuntimeError, match="did not converge"):
+    with pytest.raises(RuntimeError, match="did not converge"):
         graph.connected_components(chain, max_iter=25)
-
-
-def test_lss_matches_min_label_on_random_graph(spark):
-    """Property cross-validation: on a deterministic pseudo-random
-    graph with several components, both implementations agree
-    exactly."""
-    edges = [
-        (i, (i * 7 + 3) % 50 + (i % 5) * 50)
-        for i in range(0, 250, 3)
-    ]
-    df = spark.createDataFrame(
-        [(a, b) for a, b in edges if a != b], "a long, b long"
-    )
-    lss = {
-        (r.id, r.component)
-        for r in graph.connected_components_lss(df).collect()
-    }
-    ml = {
-        (r.id, r.component)
-        for r in graph.connected_components(df, max_iter=60).collect()
-    }
-    assert lss == ml and len(lss) > 0
 
 
 def test_od_triangles_matches_bruteforce_and_plans_equi_only(spark):

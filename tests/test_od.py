@@ -157,21 +157,18 @@ def test_od_per_node_capacity(spark):
     assert bad_out == 0 and bad_in == 0
 
 
-def test_kernel_partition_contract(spark, monkeypatch):
-    """With the explicit knob set, the kernel stage has exactly that
-    many tasks, every bucket lands whole in one task, and per-task
-    input stays bounded under a skewed bucket distribution (one giant
+def test_kernel_partition_contract(spark):
+    """Every bucket lands whole in one kernel task, and per-task input
+    stays bounded under a skewed bucket distribution (one giant
     bucket + many tiny ones)."""
     from pyspark.sql import functions as F
 
-    monkeypatch.setattr(od, "OD_KERNEL_PARTITIONS", 8)
     rows = [(k, 600, 1) for k in range(500)]            # giant bucket
     rows += [(k % 7, 600 + 600 * (1 + k), 1) for k in range(200)]  # tiny ones
     df = spark.createDataFrame(
         rows, "station_key long, bucket_s long, delta_i int"
     )
     rp = od._kernel_repartition(df)
-    assert rp.rdd.getNumPartitions() == 8
     tagged = rp.withColumn("pid", F.spark_partition_id())
     split_buckets = (
         tagged.groupBy("bucket_s")
