@@ -91,7 +91,7 @@ def rule_flags(docs: DataFrame) -> DataFrame:
     columns to whatever document frame comes in. A stateless narrow
     projection, so it runs IDENTICALLY on a batch table and a
     streaming micro-batch — `streaming.corpus.quality_gated` is this
-    exact function applied to a readStream (batch/stream parity is
+    exact function applied to a file stream (batch/stream parity is
     tested, same pattern as streaming.ingest.windowed_avg)."""
     docs = docs.withColumn("toks", tokens("text"))
     n_tok = F.size("toks")

@@ -37,11 +37,10 @@ def read_time_range(
 ) -> DataFrame:
     """P2: conditionally-bounded time-range read, sorted by event time
     (the reference builds the WHERE clause conditionally; here absent
-    bounds simply add no filter). Round-3: reads the date-partitioned
-    layout — date bounds prune whole partition dirs (PartitionFilters)
-    and the precise ts bounds prune row groups (PushedFilters). The
-    flat-file raw-nanos pushdown form remains available as
-    catalog.load_events_range (plan-tested separately)."""
+    bounds simply add no filter). Reads the date-partitioned layout
+    through `catalog.load_events_range_pruned`: date bounds prune
+    whole partition dirs (PartitionFilters) and the precise ts bounds
+    prune row groups (PushedFilters)."""
     from ..sources.catalog import load_events_range_pruned
 
     return load_events_range_pruned(

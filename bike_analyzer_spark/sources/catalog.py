@@ -252,51 +252,6 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return _load_table_direct(spark, sf_dir, name)
 
 
-def load_events_range(
-    spark: SparkSession,
-    sf_dir: str,
-    start: str | None = None,
-    end: str | None = None,
-) -> DataFrame:
-    """Time-bounded events read with REAL parquet pushdown.
-
-    Micros data (current testdata): ts is a native TimestampType, so
-    plain timestamp-literal filters push into the scan (PushedFilters)
-    and skip row groups via parquet min/max stats — no translation
-    machinery needed.
-
-    Nanos data (historical layout): the nanos->micros conversion wraps
-    ts in an expression, which blocks pushdown (Catalyst can't invert
-    it into a parquet filter — verified via PushedFilters), so range
-    bounds are translated to raw nanosecond literals and applied
-    BEFORE the conversion. At 100 TB this is the difference between
-    reading one day and reading the whole table.
-    """
-    unit = events_ts_unit(sf_dir)
-    if unit not in ("ns", "int64"):
-        df = _load_events(spark, sf_dir)
-        if start is not None:
-            df = df.filter(F.col("ts") >= F.lit(start).cast("timestamp"))
-        if end is not None:
-            df = df.filter(F.col("ts") <= F.lit(end).cast("timestamp"))
-        return df
-
-    import datetime as _dt
-
-    def _ns(s: str) -> int:
-        d = _dt.datetime.fromisoformat(s).replace(tzinfo=_dt.timezone.utc)
-        return int(d.timestamp()) * 1_000_000_000 + d.microsecond * 1000
-
-    df = spark.read.schema(_events_read_schema(unit)).parquet(
-        os.path.join(sf_dir, "events.parquet")
-    )
-    if start is not None:
-        df = df.filter(F.col("ts") >= F.lit(_ns(start)))
-    if end is not None:
-        df = df.filter(F.col("ts") <= F.lit(_ns(end)))
-    return df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-
-
 def materialize_events_partitioned(
     spark: SparkSession, sf_dir: str, path: str
 ) -> None:
@@ -314,10 +269,6 @@ def materialize_events_partitioned(
         .partitionBy("event_date")
         .parquet(path)
     )
-
-
-def load_events_partitioned(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
 
 
 def _events_partitioned_schema() -> T.StructType:
@@ -393,7 +344,7 @@ def load_events_range_pruned(
     skipped via the listing) and the precise timestamp bounds land in
     PushedFilters (row-group min/max pruning within the surviving
     partitions). Bounds are interpreted in UTC, matching the session
-    timezone and `load_events_range`'s raw-nanos translation."""
+    timezone."""
     df = events_partitioned(spark, sf_dir)
     if start is not None:
         df = df.filter(

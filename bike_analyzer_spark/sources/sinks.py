@@ -124,10 +124,6 @@ def append_partitioned(
     out.write.mode("append").partitionBy("event_date").parquet(path)
 
 
-def read_partitioned(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
 def compact_parquet(
     spark: SparkSession, path: str, target_bytes: int = 128 << 20
 ) -> tuple[int, int]:

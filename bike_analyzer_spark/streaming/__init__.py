@@ -1,6 +1,7 @@
 """Structured Streaming variants of the ingest/analytics path
 (SURVEY.md §2.9). The reference approximates a stream by re-running a
-polling batch; here the same logic runs as a real stream."""
+polling batch; here the same logic runs as a real stream. Every
+surface reads, drains and lands through `drain.py`."""
 
 from .ingest import (
     dedup_stream,
@@ -10,7 +11,8 @@ from .ingest import (
     sliding_avg,
     windowed_avg,
 )
-from .sessions import events_stream, run_sessions_to_memory, session_stream
+from .joins import events_stream
+from .sessions import run_sessions_to_memory, session_stream
 
 __all__ = [
     "dedup_stream",

@@ -2,7 +2,8 @@
 vectors land continuously (an inference service's lookup requests, a
 nightly batch of new documents to link against the corpus), each
 micro-batch probes the PERSISTED inverted lists, and top-k results
-append exactly-once to the results store.
+land exactly-once in the results store under `batch_id=<id>`
+(`drain.land_batches`).
 
 This is why `ivf.inverted_lists` persists the index partitioned by
 centroid_id: the serving join prunes the corpus scan to the probed
@@ -12,15 +13,14 @@ lists, never the corpus. The probe logic is `ivf.topk_for` — the
 SAME code path the batch `sim_ivf_topk` query uses, so batch and
 streaming cannot drift (parity-tested).
 
-State: ZERO. The index is the store; queries are stateless lookups;
-the checkpoint gives exactly-once file-level semantics (a restart
-over already-served shards appends nothing).
+State: ZERO. The index is the store; queries are stateless lookups.
+The checkpoint skips committed shards, and the per-batch overwrite
+makes a replayed, uncommitted batch replace its own results.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators.ivf import (
@@ -32,6 +32,7 @@ from ..operators.ivf import (
 )
 from ..operators.similarity import _with_norm
 from ..sources.catalog import load
+from .drain import file_stream, land_batches
 
 #: pinned request schema: streaming sources never infer
 QUERY_SCHEMA = T.StructType(
@@ -43,13 +44,9 @@ QUERY_SCHEMA = T.StructType(
 
 
 def vector_query_stream(spark: SparkSession, landing_dir: str) -> DataFrame:
-    """File-source stream over landed query-vector shards (one shard
-    per trigger — a request batch = a micro-batch)."""
-    return (
-        spark.readStream.schema(QUERY_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing_dir)
-    )
+    """Stream over landed query-vector shards (a request batch = a
+    micro-batch)."""
+    return file_stream(spark, QUERY_SCHEMA, landing_dir)
 
 
 def run_topk_to_parquet(
@@ -60,24 +57,14 @@ def run_topk_to_parquet(
     checkpoint: str,
 ) -> None:
     """Drain every landed query shard through the persisted IVF index
-    (availableNow) and append (query_id, neighbor_id, cos, rank) to
-    the results store, exactly-once per shard via the checkpoint."""
-
-    def _serve(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        topk_for(spark, sf_dir, batch_df).write.mode("append").parquet(
-            out_path
-        )
-
-    q = (
-        vector_query_stream(spark, landing_dir)
-        .writeStream.foreachBatch(_serve)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    and land (query_id, neighbor_id, cos, rank) in the results store,
+    exactly-once per shard."""
+    land_batches(
+        vector_query_stream(spark, landing_dir),
+        lambda batch_df, _: topk_for(spark, sf_dir, batch_df),
+        out_path,
+        checkpoint,
     )
-    q.awaitTermination()
 
 
 def run_index_ingest(
@@ -92,39 +79,29 @@ def run_index_ingest(
     micro-batch is assigned under the FROZEN trained centroids (the
     standard IVF maintenance contract: the coarse quantizer retrains
     offline on a schedule, arrivals between retrains file into the
-    existing lists), and appends to a caller-owned partitioned lists
-    store. Exactly-once per shard via the checkpoint; the store is
-    immediately servable with `serve_index` / `ivf.topk_for`."""
+    existing lists), and lands in a caller-owned lists store under
+    `batch_id=<id>/centroid_id=<c>`, exactly-once per shard. The store
+    is immediately servable with `serve_index` / `ivf.topk_for`, whose
+    probe prunes on the nested centroid_id partitions."""
     cents_row = _centroid_row(
         _index_centroids(
             spark, sf_dir, _with_norm(load(spark, sf_dir, "embeddings"))
         )
     )
 
-    def _append(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        (
-            _assigned(
-                _with_norm(
-                    batch_df.withColumnRenamed("query_id", "vec_id")
-                ),
-                cents_row,
-            )
-            .select("vec_id", "embedding", "norm", "centroid_id")
-            .write.mode("append")
-            .partitionBy("centroid_id")
-            .parquet(index_path)
-        )
+    def _assign(batch_df: DataFrame, _: int) -> DataFrame:
+        return _assigned(
+            _with_norm(batch_df.withColumnRenamed("query_id", "vec_id")),
+            cents_row,
+        ).select("vec_id", "embedding", "norm", "centroid_id")
 
-    q = (
-        vector_query_stream(spark, landing_dir)
-        .writeStream.foreachBatch(_append)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    land_batches(
+        vector_query_stream(spark, landing_dir),
+        _assign,
+        index_path,
+        checkpoint,
+        partition_by=["centroid_id"],
     )
-    q.awaitTermination()
 
 
 def serve_index(

@@ -5,8 +5,8 @@ gates the batch corpus queries use, and survivors append exactly-once
 to the curated store.
 
 Design:
-- file-source stream with a PINNED schema, one landed file per
-  trigger (a shard = a micro-batch);
+- `drain.file_stream`: a PINNED schema, one landed file per trigger
+  (a shard = a micro-batch);
 - `operators.quality.rule_flags` is a stateless narrow projection, so
   the streaming gate IS the batch gate — no reimplementation to
   drift (parity tested in tests/test_streaming_corpus.py);
@@ -24,16 +24,12 @@ from pyspark.sql import functions as F
 
 from ..operators.quality import rule_flags
 from ..schemas import TESTDATA
+from .drain import drain, file_stream
 
 
 def document_stream(spark: SparkSession, landing_dir: str) -> DataFrame:
-    """File-source stream over landed document shards (schema pinned —
-    streaming sources never infer)."""
-    return (
-        spark.readStream.schema(TESTDATA["documents"])
-        .option("maxFilesPerTrigger", 1)  # replay shard-by-shard
-        .parquet(landing_dir)
-    )
+    """Stream over landed document shards, shard by shard."""
+    return file_stream(spark, TESTDATA["documents"], landing_dir)
 
 
 def quality_gated(docs: DataFrame) -> DataFrame:
@@ -71,40 +67,24 @@ def run_gate_dedup_to_store(
     crash-safe staged-swap sink the stations table uses. The store IS
     the dedup state — no streaming state at all — and the rewrite
     makes micro-batch replay idempotent (an append sink would double
-    rows when foreachBatch retries). At warehouse scale the same
+    rows when an uncommitted batch re-runs). At warehouse scale the same
     contract is a Delta MERGE on content_hash; the logical plan —
     shuffle both sides on a uniform hash key, keep one row per key —
     is identical."""
     from ..sources import sinks
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         b = batch_df.withColumn(
             "content_hash", F.md5(F.encode(F.col("text"), "UTF-8"))
         ).withColumn("keep_pri", -F.col("doc_id"))
         sinks.merge_upsert(spark, b, path, ["content_hash"], "keep_pri")
 
-    q = (
-        gated.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(gated, each_batch=_merge, checkpoint=checkpoint)
 
 
 def run_gate_to_parquet(
     gated: DataFrame, path: str, checkpoint: str
 ) -> None:
-    """Drain everything landed so far into the curated parquet store
-    (availableNow), exactly-once per shard via the checkpoint."""
-    q = (
-        gated.writeStream.format("parquet")
-        .option("path", path)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    """Drain everything landed so far into the curated parquet store,
+    exactly-once per shard via the checkpoint."""
+    drain(gated, path=path, checkpoint=checkpoint)

@@ -12,10 +12,8 @@ with the offline report (parity-tested in tests/test_driftserve.py).
 State: ZERO — the baseline is a static |types|-row frame broadcast
 into each batch; scoring is one aggregate per micro-batch.
 
-Exactly-once is the qualityserve recipe verbatim: checkpoint +
-per-batch_id OVERWRITE partition, so a replayed (uncommitted) batch
-replaces its own report instead of duplicating it, and readers see
-batch lineage as a partition column.
+Exactly-once: each batch's report lands under `batch_id=<id>`
+through `drain.land_batches`.
 """
 
 from __future__ import annotations
@@ -25,6 +23,7 @@ from pyspark.sql import functions as F
 
 from ..operators.drift import psi_table
 from ..sources.catalog import load
+from .drain import land_batches
 from .joins import events_stream
 
 
@@ -56,24 +55,14 @@ def run_drift_to_parquet(
     out_path: str,
     checkpoint: str,
 ) -> None:
-    """Drain every landed event shard (availableNow), scoring each
+    """Drain every landed event shard, scoring each
     micro-batch's type mix against the frozen baseline and landing
     the per-type + '(all)' PSI report under batch_id=<id>,
     exactly-once per shard."""
     baseline = baseline_counts(spark, sf_dir).localCheckpoint()
-
-    def _monitor(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        batch_psi(batch_df, baseline).write.mode("overwrite").parquet(
-            f"{out_path}/batch_id={batch_id}"
-        )
-
-    q = (
-        events_stream(spark, landing_dir)
-        .writeStream.foreachBatch(_monitor)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    land_batches(
+        events_stream(spark, landing_dir),
+        lambda batch_df, _: batch_psi(batch_df, baseline),
+        out_path,
+        checkpoint,
     )
-    q.awaitTermination()

@@ -7,10 +7,9 @@ can — and max() of register maxima is ALGEBRAIC, so per-batch
 partials re-merge losslessly, the rollupserve invariant).
 
 Write side: each micro-batch reduces to its own (register, max
-rank) partials, landed under `batch_id=<id>` with the per-batch
-OVERWRITE recipe (qualityserve/driftserve/rollupserve) — a replayed
-batch replaces its own partition, so replay is exactly-once with no
-read-modify-write window.
+rank) partials, landed under `batch_id=<id>` by `drain.land_batches`
+— a replayed batch replaces its own partition, so replay is
+exactly-once with no read-modify-write window.
 
 Read side (`serve_hll`): one max-merge over the partials store
 (size tracks registers x batches, never events), then the SAME
@@ -28,6 +27,7 @@ from pyspark.sql import functions as F
 
 from ..functions.textfns import hash64
 from ..operators.scale import _EST, _RHO, HLL_LOW_BITS, HLL_M, HLL_SALT
+from .drain import land_batches
 from .joins import events_stream
 
 
@@ -54,24 +54,14 @@ def run_hll_to_parquet(
     out_path: str,
     checkpoint: str,
 ) -> None:
-    """Drain landed event shards (availableNow), landing each
-    batch's register partials under batch_id=<id>, exactly-once."""
-
-    def _land(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        batch_registers(batch_df).write.mode("overwrite").parquet(
-            f"{out_path}/batch_id={batch_id}"
-        )
-
-    q = (
-        events_stream(spark, landing_dir)
-        .writeStream.foreachBatch(_land)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    """Drain landed event shards, landing each batch's register
+    partials under batch_id=<id>, exactly-once."""
+    land_batches(
+        events_stream(spark, landing_dir),
+        lambda batch_df, _: batch_registers(batch_df),
+        out_path,
+        checkpoint,
     )
-    q.awaitTermination()
 
 
 def serve_hll(spark: SparkSession, out_path: str) -> DataFrame:

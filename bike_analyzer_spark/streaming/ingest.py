@@ -11,12 +11,12 @@ Mapping from the reference's polling model:
   watermark is the strict-superset behavior.
 - tumbling `window()` = the `dt.floor(freq)` buckets of
   od_inference.py:50 / the hour buckets of sql/queries.sql:37,48.
-- `foreachBatch` + merge_upsert = the per-poll ON CONFLICT upsert
+- a per-batch merge_upsert = the per-poll ON CONFLICT upsert
   (etl_gbfs.py:82-93) applied streaming-side.
 
 Batch/stream parity: `windowed_avg` works unchanged on a batch frame
 (window() is the same function) — tested by running both paths over
-identical data.
+identical data. Reading and draining go through `drain.py`.
 """
 
 from __future__ import annotations
@@ -26,36 +26,20 @@ from pyspark.sql import functions as F
 
 from ..schemas import STATION_STATUS
 from ..sources import sinks
+from .drain import drain, file_stream
 
 
 def status_stream(spark: SparkSession, landing_dir: str) -> DataFrame:
-    """File-source stream over landed status snapshots (schema pinned —
-    streaming sources never infer)."""
-    return (
-        spark.readStream.schema(STATION_STATUS)
-        .option("maxFilesPerTrigger", 1)  # replay poll-by-poll
-        .parquet(landing_dir)
-    )
+    """Stream over landed status snapshots, poll by poll."""
+    return file_stream(spark, STATION_STATUS, landing_dir)
 
 
 def windowed_avg(
     status: DataFrame, minutes: int = 10, watermark: str = "30 minutes"
 ) -> DataFrame:
-    """Tumbling-window mean availability per station; watermark bounds
-    state. Works identically on batch and streaming frames."""
-    df = status
-    if df.isStreaming:
-        df = df.withWatermark("scraped_at", watermark)
-    return (
-        df.groupBy(
-            F.window("scraped_at", f"{minutes} minutes").alias("w"),
-            "station_id",
-        )
-        .agg(F.avg("num_bikes_available").alias("avg_bikes"))
-        .select(
-            F.col("w.start").alias("bucket_start"), "station_id", "avg_bikes"
-        )
-    )
+    """Tumbling-window mean availability per station: `sliding_avg`
+    with the slide equal to the window."""
+    return sliding_avg(status, minutes, minutes, watermark)
 
 
 def sliding_avg(
@@ -64,14 +48,12 @@ def sliding_avg(
     slide_minutes: int = 5,
     watermark: str = "30 minutes",
 ) -> DataFrame:
-    """SLIDING-window mean availability per station — the overlapping
-    variant of `windowed_avg` (each event lands in
-    minutes/slide_minutes windows; a dashboard's '10-minute average,
-    refreshed every 5'). Same watermark-bounded state story: state
-    per (station, open window), windows close watermark-late. Works
-    identically on batch and streaming frames — the batch twin of the
-    streaming query IS the parity test (tumbling/session windows get
-    the same treatment; this completes the window-type set)."""
+    """Sliding-window mean availability per station (each event lands
+    in minutes/slide_minutes windows; a dashboard's '10-minute
+    average, refreshed every 5'). The watermark bounds state to one
+    row per (station, open window); windows close watermark-late.
+    Works identically on batch and streaming frames, so the batch twin
+    of the streaming query is the parity test."""
     df = status
     if df.isStreaming:
         df = df.withWatermark("scraped_at", watermark)
@@ -90,16 +72,9 @@ def sliding_avg(
 
 
 def run_to_memory(df: DataFrame, name: str) -> None:
-    """Drain the stream with availableNow (process everything landed,
-    then stop) into an in-memory table for inspection/tests."""
-    q = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    """Drain everything landed into the in-memory table `name`
+    (complete mode), for inspection and tests."""
+    drain(df, table=name, mode="complete")
 
 
 def dedup_stream(
@@ -132,10 +107,4 @@ def foreach_batch_upsert(
             spark, batch_df, path, ["station_id"], "scraped_at"
         )
 
-    q = (
-        status.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(status, each_batch=merge, checkpoint=checkpoint)

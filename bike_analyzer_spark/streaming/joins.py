@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..schemas import TESTDATA
+from .drain import drain, file_stream
 
 #: purchases count as conversions this many minutes after the view
 CONVERSION_HORIZON_MIN = 30
@@ -38,15 +39,10 @@ LATE_LIMIT = "1 hour"
 
 
 def events_stream(spark: SparkSession, landing_dir: str) -> DataFrame:
-    """File-source stream over landed event shards, schema pinned
-    (streaming sources never infer); one file per micro-batch so
+    """Stream over landed event shards; one file per micro-batch so
     replays exercise CROSS-batch join buffering, not a single-batch
     degenerate case."""
-    return (
-        spark.readStream.schema(TESTDATA["events"])
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing_dir)
-    )
+    return file_stream(spark, TESTDATA["events"], landing_dir)
 
 
 def _funnel_sides(events: DataFrame, horizon_min: int):
@@ -156,7 +152,7 @@ def conversion_join_right_outer(
 
     user_id comes from whichever side exists (they are equal on
     matches by the join condition). Batch frame = plain right join,
-    the parity oracle (round-8 verdict ask #5)."""
+    the parity oracle."""
     views, purchases, cond = _funnel_sides(events, horizon_min)
     return views.join(purchases, cond, "right_outer").select(
         F.coalesce("user_id", "p_user").alias("user_id"),
@@ -182,8 +178,7 @@ def conversion_join_full_outer(
     state stays watermark-bounded exactly as in the inner join.
 
     Completes the stream-stream join matrix (inner / left / right /
-    full — round-8 verdict ask #5). Batch frame = plain full join,
-    the parity oracle."""
+    full). Batch frame = plain full join, the parity oracle."""
     views, purchases, cond = _funnel_sides(events, horizon_min)
     return views.join(purchases, cond, "full_outer").select(
         F.coalesce("user_id", "p_user").alias("user_id"),
@@ -199,34 +194,17 @@ def conversion_join_full_outer(
     )
 
 
-def run_outer_conversions_to_memory(
-    spark: SparkSession, landing_dir: str, name: str
-):
-    """Drain the landed shards through the OUTER join (availableNow;
-    append mode — matches emit per micro-batch, null-right rows emit
-    at watermark eviction). Returns the finished query handle so
-    tests can read the final watermark from its progress."""
-    return run_join_variant_to_memory(
-        spark, landing_dir, name, conversion_join_outer
-    )
-
-
 def run_join_variant_to_memory(
-    spark: SparkSession, landing_dir: str, name: str, join_fn
+    spark: SparkSession,
+    landing_dir: str,
+    name: str,
+    join_fn=conversion_join,
 ):
-    """Drain the landed shards through any funnel-join variant
-    (availableNow; append mode). Returns the finished query handle so
-    tests can read the final watermark from its progress."""
-    q = (
-        join_fn(events_stream(spark, landing_dir))
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    """Drain the landed shards through any funnel-join variant into
+    the in-memory table `name` (append mode). Returns the finished
+    query handle so tests can read the final watermark from its
+    progress."""
+    return drain(join_fn(events_stream(spark, landing_dir)), table=name)
 
 
 def enriched_nation_counts(
@@ -258,20 +236,3 @@ def enriched_nation_counts(
             F.col("w.start").alias("hour_start"), "n_name", "n_signups"
         )
     )
-
-
-def run_conversions_to_memory(
-    spark: SparkSession, landing_dir: str, name: str
-) -> None:
-    """Drain the landed event shards through the stream-stream join
-    into an in-memory table (availableNow; append mode — inner
-    stream-stream joins emit each match exactly once)."""
-    q = (
-        conversion_join(events_stream(spark, landing_dir))
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()

@@ -12,8 +12,8 @@ event-time min/max, the high-water mark BEFORE this batch (the max
 event time across all previously landed batches — read back from
 the audit store itself, which is batches-sized, not data-sized),
 and the count of rows older than (prior high-water mark - delay).
-Landed under `batch_id=<id>` with the per-batch OVERWRITE recipe,
-so replay is exactly-once like every other serve in this package.
+Landed under `batch_id=<id>` by `drain.land_batches`, so replay is
+exactly-once like every other serve in this package.
 
 The lateness definition is DETERMINISTIC given the batch sequence
 (maxFilesPerTrigger=1 makes file order the batch order), which is
@@ -28,6 +28,7 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .drain import land_batches
 from .joins import events_stream
 
 #: allowed delivery delay (microseconds) before a row counts late —
@@ -41,16 +42,15 @@ def run_late_audit_to_parquet(
     out_path: str,
     checkpoint: str,
 ) -> None:
-    """Drain landed event shards (availableNow), landing one audit
-    row per batch under batch_id=<id>, exactly-once."""
+    """Drain landed event shards, landing one audit row per batch
+    under batch_id=<id>, exactly-once."""
 
-    def _audit(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def _audit(batch_df: DataFrame, batch_id: int) -> DataFrame:
         try:
             # 1-row aggregate over the batches-sized audit store —
             # the bpetrain/constraints .first() allowance, never a
-            # data-sized materialization
+            # data-sized materialization; a replayed batch skips its
+            # own earlier row
             prior = (
                 spark.read.parquet(out_path)
                 .where(F.col("batch_id") < batch_id)
@@ -66,7 +66,7 @@ def run_late_audit_to_parquet(
             # with prior_hwm_us=NULL / n_late=0 and silently
             # under-report lateness.
             prior = None
-        stats = batch_df.select(
+        return batch_df.select(
             F.expr("unix_micros(ts)").alias("us")
         ).agg(
             F.count(F.lit(1)).alias("n_rows"),
@@ -83,18 +83,10 @@ def run_late_audit_to_parquet(
             "prior_hwm_us",
             F.lit(prior).cast("long"),
         )
-        stats.write.mode("overwrite").parquet(
-            f"{out_path}/batch_id={batch_id}"
-        )
 
-    q = (
-        events_stream(spark, landing_dir)
-        .writeStream.foreachBatch(_audit)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    land_batches(
+        events_stream(spark, landing_dir), _audit, out_path, checkpoint
     )
-    q.awaitTermination()
 
 
 def serve_late_audit(spark: SparkSession, out_path: str) -> DataFrame:

@@ -3,7 +3,7 @@ classifier (`operators/classifier.py`): document shards land
 continuously, each micro-batch is scored under the FROZEN persisted
 model (the fastText-filter deployment contract: the classifier
 retrains offline on a schedule; arrivals between retrains are scored
-by the current model), and verdicts append exactly-once to the
+by the current model), and verdicts land exactly-once in the
 scores store.
 
 The scoring logic is `classifier.score_docs` — the SAME code path
@@ -12,22 +12,18 @@ cannot drift (parity-tested in tests/test_qualityserve.py). State:
 ZERO — the model is the store, scoring is a stateless projection +
 per-doc partial agg.
 
-Exactly-once comes from checkpoint + IDEMPOTENT sink: foreachBatch
-alone is at-least-once (a crash after the write but before the
-checkpoint commit re-runs the batch on restart), so each batch
-OVERWRITES its own batch_id=<id> partition of the scores store —
-the documented foreachBatch dedup recipe; a replayed batch replaces
-its own output instead of appending duplicates (round-7 ADVICE; the
-crash-replay path is pinned in tests alongside the clean restart).
-Readers see batch_id as a partition column — shard lineage for free.
+Exactly-once: each batch's verdicts land under `batch_id=<id>`
+through `drain.land_batches`, so a replayed, uncommitted batch
+replaces its own scores; readers see batch_id as a partition column.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 from ..operators.classifier import _index_model, score_docs
 from .corpus import document_stream
+from .drain import land_batches
 
 
 def run_score_to_parquet(
@@ -38,24 +34,12 @@ def run_score_to_parquet(
     checkpoint: str,
 ) -> None:
     """Drain every landed document shard through the persisted model
-    (availableNow) and land (doc_id, log_odds, keep_nb, keep_rule)
-    in the scores store, exactly-once per shard: the checkpoint skips
-    committed batches and the per-batch overwrite makes an UNcommitted
-    replay idempotent."""
+    and land (doc_id, log_odds, keep_nb, keep_rule) in the scores
+    store, exactly-once per shard."""
     model, params = _index_model(spark, sf_dir)
-
-    def _score(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        score_docs(batch_df, model, params).write.mode(
-            "overwrite"
-        ).parquet(f"{out_path}/batch_id={batch_id}")
-
-    q = (
-        document_stream(spark, landing_dir)
-        .writeStream.foreachBatch(_score)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    land_batches(
+        document_stream(spark, landing_dir),
+        lambda batch_df, _: score_docs(batch_df, model, params),
+        out_path,
+        checkpoint,
     )
-    q.awaitTermination()

@@ -8,10 +8,10 @@ upkeep EXACTLY-ONCE without a transactional store.
 
 * Write side: each micro-batch reduces to its own hour-grain
   ALGEBRAIC partials — (n, sum_cents, min, max) per (bucket, type)
-  — landed under `batch_id=<id>` with the per-batch OVERWRITE
-  recipe (qualityserve/driftserve). A replayed batch replaces its
-  own partition; nothing is ever merged in place, so there is no
-  read-modify-write window to double-count through.
+  — landed under `batch_id=<id>` by `drain.land_batches`. A
+  replayed batch replaces its own partition; nothing is ever merged
+  in place, so there is no read-modify-write window to double-count
+  through.
 * Read side (`serve_rollup`): re-aggregating partials is lossless
   for algebraic functions (sum of sums, sum of counts, min of mins,
   max of maxes — the hypertable cascade's own invariant), so the
@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.exact import cents, halfup_avg_sql
+from .drain import land_batches
 from .joins import events_stream
 
 
@@ -55,24 +56,14 @@ def run_rollup_to_parquet(
     out_path: str,
     checkpoint: str,
 ) -> None:
-    """Drain landed event shards (availableNow), landing each
-    batch's hour partials under batch_id=<id>, exactly-once."""
-
-    def _roll(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        batch_hour_partials(batch_df).write.mode("overwrite").parquet(
-            f"{out_path}/batch_id={batch_id}"
-        )
-
-    q = (
-        events_stream(spark, landing_dir)
-        .writeStream.foreachBatch(_roll)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    """Drain landed event shards, landing each batch's hour partials
+    under batch_id=<id>, exactly-once."""
+    land_batches(
+        events_stream(spark, landing_dir),
+        lambda batch_df, _: batch_hour_partials(batch_df),
+        out_path,
+        checkpoint,
     )
-    q.awaitTermination()
 
 
 def merge_partials(partials: DataFrame) -> DataFrame:

@@ -3,7 +3,7 @@
 query over the file-replay source, with an event-time watermark.
 
 This completes the §2.9 capability story: ingest (tumbling windows +
-foreachBatch upsert, `ingest.py`), cross-batch state (W1 deltas,
+per-batch upsert, `ingest.py`), cross-batch state (W1 deltas,
 `stateful.py`), and now gap-merged session windows — the operator the
 reference's batch-only SQLite model cannot express at all (its
 sessions would need a full-table re-sort per poll; reference
@@ -16,28 +16,17 @@ only wraps it with a source, a watermark, and a sink.
 Emission semantics (append mode + watermark): a session window emits
 once the watermark passes its close (last event + gap). Sessions still
 "open" relative to the final watermark stay in state and are NOT
-emitted by an availableNow drain — exactly the behavior a 100-TB
+emitted by a drain (`drain.py`) — exactly the behavior a 100-TB
 continuous pipeline wants (no premature partial sessions), pinned by
 test against the batch result.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 from ..operators.asof import SESSION_GAP_MIN, session_window_agg
-
-
-def events_stream(
-    spark: SparkSession, landing_dir: str, schema
-) -> DataFrame:
-    """File-source replay of landed event files, one file per
-    micro-batch (schema pinned — streaming sources never infer)."""
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing_dir)
-    )
+from .drain import drain
 
 
 def session_stream(
@@ -60,7 +49,7 @@ def session_stream(
 def run_sessions_to_parquet(
     sessions: DataFrame, out_dir: str, checkpoint_dir: str
 ) -> None:
-    """Drain with availableNow into a DURABLE parquet sink with a
+    """Drain into a DURABLE parquet sink with a
     checkpoint — the production / recovery shape. Restarting with the
     same checkpoint resumes from the commit log: already-processed
     files are skipped, open-session state is restored from the state
@@ -72,31 +61,16 @@ def run_sessions_to_parquet(
     close, so rows are immutable-once-emitted — the property that lets
     a 100-TB pipeline tail this directory safely.
     """
-    q = (
-        sessions.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(sessions, path=out_dir, checkpoint=checkpoint_dir)
 
 
 def run_sessions_to_memory(
     sessions: DataFrame, name: str, mode: str = "append"
 ) -> None:
-    """Drain with availableNow into an in-memory table.
+    """Drain into an in-memory table.
 
     append  -> only watermark-finalized sessions (production shape);
     complete -> every session including open ones (full-parity shape,
     used by the test to prove equality with the batch query).
     """
-    q = (
-        sessions.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(sessions, table=name, mode=mode)

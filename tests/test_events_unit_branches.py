@@ -11,7 +11,6 @@ import shutil
 import pyarrow as pa
 import pyarrow.parquet as papq
 import pytest
-from pyspark.sql import functions as F
 
 from bike_analyzer_spark.sources import catalog
 from tests.conftest import SF_DIR_SMOKE
@@ -56,27 +55,3 @@ def test_both_branches_yield_identical_instants(spark, dual_dirs):
     )
     assert a == b and len(a) > 0
     assert a[0][1].year == 2024
-
-
-def test_nanos_range_read_pushes_raw_long_bounds(spark, dual_dirs):
-    _, ns_dir = dual_dirs
-    df = catalog.load_events_range(
-        spark, ns_dir, start="2024-01-08 00:00:00"
-    )
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    pushed = plan.split("PushedFilters")[1].split("]")[0]
-    assert "GreaterThanOrEqual(ts,1704672000000000000" in pushed, plan
-
-
-def test_range_reads_agree_across_units(spark, dual_dirs):
-    us_dir, ns_dir = dual_dirs
-    bounds = dict(start="2024-01-03 00:00:00", end="2024-01-05 12:00:00")
-    a = sorted(
-        r.event_id
-        for r in catalog.load_events_range(spark, us_dir, **bounds).collect()
-    )
-    b = sorted(
-        r.event_id
-        for r in catalog.load_events_range(spark, ns_dir, **bounds).collect()
-    )
-    assert a == b and len(a) > 0

@@ -15,6 +15,7 @@ import pytest
 
 from bike_analyzer_spark.sources import gbfs
 from bike_analyzer_spark.sources.gbfs_datasource import GbfsDataSource
+from bike_analyzer_spark.streaming.drain import drain as stream_drain
 from tests.test_sources import SI, SS
 
 
@@ -124,19 +125,14 @@ def test_streaming_reader_tails_new_snapshots_incrementally(
     def drain():
         # parquet sink: a memory sink cannot RESUME from a
         # checkpoint, and resumability is the thing under test
-        q = (
+        stream_drain(
             spark.readStream.format("gbfs")
             .option("path", lzone)
             .option("feed", "station_information")
-            .load()
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+            .load(),
+            path=out,
+            checkpoint=ckpt,
         )
-        q.awaitTermination()
         return spark.read.parquet(out).collect()
 
     first = drain()
@@ -177,19 +173,14 @@ def test_streaming_reader_fails_loudly_on_behind_watermark_snapshot(
     spark.dataSource.register(GbfsDataSource)
 
     def drain():
-        q = (
+        stream_drain(
             spark.readStream.format("gbfs")
             .option("path", lzone)
             .option("feed", "station_information")
-            .load()
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+            .load(),
+            path=out,
+            checkpoint=ckpt,
         )
-        q.awaitTermination()
 
     drain()  # watermark now '0001.json'
     bad = _copy.deepcopy(SI)

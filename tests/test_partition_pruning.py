@@ -21,7 +21,7 @@ def test_partition_layout(part_events):
     assert len(dirs) == 30  # one per January day
 
 def test_latest_day_prunes_to_one_partition(spark, part_events):
-    ev = catalog.load_events_partitioned(spark, part_events)
+    ev = spark.read.parquet(part_events)
     latest_day = ev.agg(F.max("event_date")).first()[0]
     df = ev.filter(F.col("event_date") == F.lit(latest_day))
     df.collect()

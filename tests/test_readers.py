@@ -19,24 +19,6 @@ def test_time_range_filter_pushed_to_scan(spark):
     assert "event_date" in plan.split("PartitionFilters")[1].split("]")[0], plan
 
 
-def test_flat_range_read_pushes_ts_bound(spark):
-    """The flat-file form's time bound reaches the parquet scan in the
-    file's native ts domain: a plain timestamp literal for micros data,
-    a raw-nanos long for nanos data (where the bound must be translated
-    to survive the nanos->micros conversion)."""
-    from bike_analyzer_spark.sources.catalog import (
-        events_ts_unit,
-        load_events_range,
-    )
-    df = load_events_range(spark, SF_DIR_ORACLE, start="2024-01-08 00:00:00")
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    pushed = plan.split("PushedFilters")[1].split("]")[0]
-    assert "GreaterThanOrEqual(ts," in pushed, plan
-    if events_ts_unit(SF_DIR_ORACLE) in ("ns", "int64"):
-        assert "GreaterThanOrEqual(ts,1704672000000000000" in pushed, plan
-    else:
-        assert "2024-01-08" in pushed, plan
-
 def test_projection_pruned_to_read_schema(spark):
     """P1: only the projected columns appear in ReadSchema."""
     df = readers.p1_projected_notnull(spark, SF_DIR_ORACLE)

@@ -1,34 +1,40 @@
 """Kill-and-replay recovery matrix — ONE parametrized exactly-once
-proof over EVERY streaming writer (round-8 verdict ask #7; the deep
-per-surface behavior tests live next to each surface, and the
-session-window state-recovery test keeps its own boundary-session
-pins in test_streaming_recovery.py).
+proof over EVERY streaming writer (the deep per-surface behavior
+tests live next to each surface, and the session-window
+state-recovery test keeps its own boundary-session pins in
+test_streaming_recovery.py).
 
 Protocol per surface, with deterministic micro-batch order (one file
 per trigger, arrival order pinned via mtimes):
 
-  split run : land the first half of the shards, drain
-              (availableNow terminates after the last committed
-              micro-batch — the strongest crash Structured Streaming
-              recovers from), land the rest, RESTART from the same
-              checkpoint and drain again;
+  split run : land the first half of the shards, drain (availableNow
+              terminates after the last committed micro-batch — the
+              strongest crash Structured Streaming recovers from),
+              land the rest, RESTART from the same checkpoint and
+              drain again. Per-batch writers (`PER_BATCH`) also lose
+              their newest commit record before the restart: the
+              crash window after the sink wrote a batch and before
+              the checkpoint committed it, so that batch re-runs;
   one-shot  : land everything up front into a fresh landing dir and
               drain once with a fresh checkpoint.
 
 The final tables must be byte-equal (sorted-row tuples over all
 columns). That single assertion covers the whole recovery contract:
-no committed batch replays (no duplicates), no landed shard is lost
-(state store + file-source log restore), watermarks resume from the
-checkpoint (outer-join null emission and window finalization happen
-at the same batch positions), and batch-id-addressed stores land the
-same partitions — because the restart continues batch numbering where
-the first run stopped.
+no committed batch replays and no replayed batch duplicates its
+output, no landed shard is lost (state store + file-source log
+restore), watermarks resume from the checkpoint (outer-join null
+emission and window finalization happen at the same batch
+positions), and batch-id-addressed stores land the same partitions —
+because the restart continues batch numbering where the first run
+stopped.
 """
 
 from __future__ import annotations
 
 import datetime as dt
 import os
+import pathlib
+import re
 import shutil
 import time
 import uuid
@@ -36,7 +42,6 @@ import uuid
 import pytest
 from pyspark.sql import functions as F
 
-from bike_analyzer_spark.schemas import TESTDATA
 from bike_analyzer_spark.sources import gbfs
 from bike_analyzer_spark.sources.catalog import load
 from bike_analyzer_spark.streaming import (
@@ -54,6 +59,7 @@ from bike_analyzer_spark.streaming import (
     stateful,
     topk,
 )
+from bike_analyzer_spark.streaming.drain import drain
 from tests.conftest import SF_DIR_SMOKE
 
 
@@ -189,20 +195,11 @@ def _land(tdir, files, idx, ldir_name):
 
 
 def _append_runner(stream_fn):
-    """Generic durable writer for the transformation-style surfaces
-    (they all emit in append mode)."""
+    """Durable writer for the transformation-style surfaces (they all
+    emit in append mode)."""
 
     def run(spark, ldir, out, ckpt):
-        q = (
-            stream_fn(spark, ldir)
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        drain(stream_fn(spark, ldir), path=out, checkpoint=ckpt)
 
     return run
 
@@ -212,9 +209,7 @@ SURFACES = {
     "session_windows": (
         "events",
         lambda spark, ldir, out, ckpt: ssn.run_sessions_to_parquet(
-            ssn.session_stream(
-                ssn.events_stream(spark, ldir, TESTDATA["events"])
-            ),
+            ssn.session_stream(joins.events_stream(spark, ldir)),
             out,
             ckpt,
         ),
@@ -351,6 +346,21 @@ SURFACES = {
 }
 
 
+#: the foreachBatch surfaces: at-least-once, so they must absorb a
+#: re-run of their newest batch
+PER_BATCH = {
+    "ann_index_ingest",
+    "ann_topk_serve",
+    "corpus_dedup_store",
+    "hll_registers",
+    "hour_rollup",
+    "late_audit",
+    "psi_drift",
+    "quality_scores",
+    "upsert_keep_latest",
+}
+
+
 def _read_sorted(spark, out):
     # repr key: total order even when outer-join nulls make tuples
     # incomparable (None < int raises); equal multisets sort to equal
@@ -371,6 +381,14 @@ def test_kill_and_replay_is_byte_equal(spark, tdir, surface):
     ckpt_a = os.path.join(tdir, "ckpt_a")
     ldir_a = _land(tdir, files, range(half), "land_a")
     run(spark, ldir_a, out_a, ckpt_a)
+    if surface in PER_BATCH:
+        # crash window: the newest batch wrote but never committed
+        commits = os.path.join(ckpt_a, "commits")
+        newest = max(
+            (f for f in os.listdir(commits) if f.isdigit()), key=int
+        )
+        for f in (newest, f".{newest}.crc"):
+            pathlib.Path(commits, f).unlink(missing_ok=True)
     _land(tdir, files, range(half, len(files)), "land_a")
     run(spark, ldir_a, out_a, ckpt_a)
 
@@ -387,3 +405,16 @@ def test_kill_and_replay_is_byte_equal(spark, tdir, surface):
         f"{surface}: kill-and-replay table differs from one-shot "
         f"({len(got_a)} vs {len(got_b)} rows)"
     )
+
+
+def test_streams_are_read_and_drained_only_in_drain_module():
+    """One module owns how a stream is read, drained and landed, so a
+    new surface inherits the exactly-once landing rule instead of
+    copying it."""
+    pkg = pathlib.Path(ssn.__file__).parents[1]
+    users = {
+        str(p.relative_to(pkg))
+        for p in pkg.rglob("*.py")
+        if re.search(r"readStream|availableNow|foreachBatch", p.read_text())
+    }
+    assert users == {"streaming/drain.py"}, users

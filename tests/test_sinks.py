@@ -53,7 +53,7 @@ def test_append_partitioned(spark, tmpdir_repo):
     ).withColumn("scraped_at", F.to_timestamp("scraped_at"))
     sinks.append_partitioned(df, p, "scraped_at", batch_ts="2025-09-05 02:00:00")
     sinks.append_partitioned(df, p, "scraped_at", batch_ts="2025-09-05 03:00:00")
-    back = sinks.read_partitioned(spark, p)
+    back = spark.read.parquet(p)
     assert back.count() == 4
     assert sorted(os.listdir(p))[:1] == ["_SUCCESS"] or any(
         e.startswith("event_date=") for e in os.listdir(p))

@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from bike_analyzer_spark.sources.catalog import load
 from bike_analyzer_spark.streaming import joins
+from bike_analyzer_spark.streaming.drain import drain
 from tests.conftest import SF_DIR_SMOKE
 
 
@@ -63,7 +64,7 @@ def test_stream_matches_batch_and_buffers_across_batches(
     }
     assert len(batch) > 0  # non-degenerate fixture
 
-    joins.run_conversions_to_memory(spark, landed_events, "conv_test")
+    joins.run_join_variant_to_memory(spark, landed_events, "conv_test")
     streamed = {
         _key(r) for r in spark.table("conv_test").collect()
     }
@@ -77,14 +78,7 @@ def test_join_state_is_watermark_bounded(spark, landed_events):
     the view side buffers forever."""
     df = joins.conversion_join(joins.events_stream(spark, landed_events))
     assert df.isStreaming
-    q = (
-        df.writeStream.format("memory")
-        .queryName("conv_plan_probe")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    q = drain(df, table="conv_plan_probe")
     assert spark.table("conv_plan_probe").count() > 0
     # the physical evidence: symmetric hash join + eviction watermark
     progress = q.recentProgress[-1]
@@ -133,17 +127,13 @@ def test_stream_static_enrichment_matches_batch(spark, landed_events):
     }
     assert len(batch) > 0
 
-    q = (
+    q = drain(
         joins.enriched_nation_counts(
             spark, joins.events_stream(spark, landed_events), SF_DIR_SMOKE
-        )
-        .writeStream.format("memory")
-        .queryName("enrich_test")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
+        ),
+        table="enrich_test",
+        mode="complete",
     )
-    q.awaitTermination()
     streamed = {
         (r.hour_start, r.n_name, r.n_signups)
         for r in spark.table("enrich_test").collect()
@@ -178,8 +168,8 @@ def test_outer_join_matches_batch_and_emits_nulls_at_watermark(
     b_null_views = {r.view_id: r.view_ts for r in batch if not r.converted}
     assert b_matched and b_null_views  # non-degenerate fixture
 
-    q = joins.run_outer_conversions_to_memory(
-        spark, landed_events, "conv_outer_test"
+    q = joins.run_join_variant_to_memory(
+        spark, landed_events, "conv_outer_test", joins.conversion_join_outer
     )
     out = spark.table("conv_outer_test").collect()
     s_matched = {

@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from bike_analyzer_spark.sources import enrich, gbfs
 from bike_analyzer_spark import streaming
+from bike_analyzer_spark.streaming.drain import drain
 
 @pytest.fixture()
 def tdir():
@@ -133,9 +134,7 @@ def test_stream_static_join(spark, tdir):
     joined = stream.join(static, "station_id").selectExpr(
         "station_id", "name", "num_bikes_available", "capacity")
     name = f"ssj_{uuid.uuid4().hex[:6]}"
-    q = (joined.writeStream.format("memory").queryName(name)
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination()
+    drain(joined, table=name)
     rows = {r.station_id: (r.name, r.num_bikes_available, r.capacity)
             for r in spark.sql(f"SELECT * FROM {name}").collect()}
     assert rows == {"s1": ("Praça A", 4, 12), "s2": ("Praça B", 5, 20)}
@@ -155,15 +154,10 @@ def test_dedup_stream_drops_cross_batch_duplicates(spark, tdir):
     for b in batches:
         b.write.mode("append").parquet(landing)
     name = f"dedup_{uuid.uuid4().hex[:6]}"
-    q = (
-        streaming.dedup_stream(streaming.status_stream(spark, landing))
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        streaming.dedup_stream(streaming.status_stream(spark, landing)),
+        table=name,
     )
-    q.awaitTermination()
     got = sorted(
         (r.station_id, r.scraped_at, r.num_bikes_available)
         for r in spark.sql(f"SELECT * FROM {name}").collect()

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from bike_analyzer_spark.sources import gbfs
 from bike_analyzer_spark.streaming import ingest as st_ingest
+from bike_analyzer_spark.streaming.drain import drain
 from bike_analyzer_spark.streaming.gapfillstream import (
     STEP_MIN,
     streaming_gapfill,
@@ -41,10 +42,10 @@ def _land(spark, landing, polls):
 
 def _run(spark, landing):
     name = f"gapfill_{uuid.uuid4().hex[:6]}"
-    q = (streaming_gapfill(st_ingest.status_stream(spark, landing))
-         .writeStream.format("memory").queryName(name)
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination()
+    drain(
+        streaming_gapfill(st_ingest.status_stream(spark, landing)),
+        table=name,
+    )
     return spark.sql(f"SELECT * FROM {name}").collect()
 
 

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from bike_analyzer_spark.operators.asof import session_window_agg
 from bike_analyzer_spark.sources.catalog import load
 from bike_analyzer_spark.streaming import sessions as ssn
+from bike_analyzer_spark.streaming.drain import file_stream
 
 SF_DIR = "/root/testdata/sf0.001"
 SENTINEL_USER = -1
@@ -82,7 +83,7 @@ def _land(tdir, files, idx):
 
 def _drain(spark, ldir, schema, out, ckpt):
     ssn.run_sessions_to_parquet(
-        ssn.session_stream(ssn.events_stream(spark, ldir, schema)),
+        ssn.session_stream(file_stream(spark, schema, ldir)),
         out,
         ckpt,
     )

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from bike_analyzer_spark.operators.asof import session_window_agg
 from bike_analyzer_spark.sources.catalog import load
 from bike_analyzer_spark.streaming import sessions as ssn
+from bike_analyzer_spark.streaming.drain import drain, file_stream
 
 SF_DIR = "/root/testdata/sf0.001"
 SENTINEL_USER = -1
@@ -84,7 +85,7 @@ def test_append_emits_exactly_watermark_closed_sessions(spark, landing):
     ldir, schema = landing
     name = f"sess_append_{uuid.uuid4().hex[:6]}"
     ssn.run_sessions_to_memory(
-        ssn.session_stream(ssn.events_stream(spark, ldir, schema)),
+        ssn.session_stream(file_stream(spark, schema, ldir)),
         name,
         mode="append",
     )
@@ -98,7 +99,7 @@ def test_complete_mode_full_parity(spark, landing):
     ldir, schema = landing
     name = f"sess_complete_{uuid.uuid4().hex[:6]}"
     ssn.run_sessions_to_memory(
-        ssn.session_stream(ssn.events_stream(spark, ldir, schema)),
+        ssn.session_stream(file_stream(spark, schema, ldir)),
         name,
         mode="complete",
     )
@@ -128,15 +129,10 @@ def test_rocksdb_state_store_parity_and_telemetry(spark, landing):
     prev = spark.conf.get(PROVIDER_CONF, None)
     name = f"sess_rocks_{uuid.uuid4().hex[:6]}"
     with rocksdb_state(spark):
-        q = (
-            ssn.session_stream(ssn.events_stream(spark, ldir, schema))
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+        q = drain(
+            ssn.session_stream(file_stream(spark, schema, ldir)),
+            table=name,
         )
-        q.awaitTermination()
     emitted = spark.sql(f"SELECT * FROM {name}").collect()
     assert {tuple(r) for r in emitted} == _batch_real(spark, ldir, schema)
     metrics = q.recentProgress[-1]["stateOperators"][0]["customMetrics"]

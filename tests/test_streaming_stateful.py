@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from bike_analyzer_spark.sources import gbfs
 from bike_analyzer_spark.streaming import ingest as st_ingest
+from bike_analyzer_spark.streaming.drain import drain
 from bike_analyzer_spark.streaming.stateful import stateful_lag_delta
 
 @pytest.fixture()
@@ -32,10 +33,7 @@ def test_stateful_delta_matches_batch_window(spark, tdir):
 
     stream = st_ingest.status_stream(spark, landing)  # 1 file per trigger
     name = f"deltas_{uuid.uuid4().hex[:6]}"
-    q = (stateful_lag_delta(stream)
-         .writeStream.format("memory").queryName(name)
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination()
+    drain(stateful_lag_delta(stream), table=name)
     got = {(r.station_id, r.scraped_at): r.delta
            for r in spark.sql(f"SELECT * FROM {name}").collect()}
 
@@ -72,10 +70,7 @@ def test_stateful_anomaly_flags_spike_and_matches_scalar(spark, tdir):
 
     stream = st_ingest.status_stream(spark, landing)
     name = f"anom_{uuid.uuid4().hex[:6]}"
-    q = (sf.stateful_anomaly(stream)
-         .writeStream.format("memory").queryName(name)
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination()
+    drain(sf.stateful_anomaly(stream), table=name)
     rows = sorted(
         spark.sql(f"SELECT * FROM {name}").collect(),
         key=lambda r: r.scraped_at,

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from bike_analyzer_spark.sources.catalog import load
 from bike_analyzer_spark.streaming import topk
+from bike_analyzer_spark.streaming.drain import drain
 from bike_analyzer_spark.streaming.joins import events_stream
 from tests.conftest import SF_DIR_SMOKE
 
@@ -25,15 +26,10 @@ def tdir():
 
 def _drain(spark, landing):
     name = f"hh_{uuid.uuid4().hex[:6]}"
-    q = (
-        topk.streaming_heavy_hitters(events_stream(spark, landing))
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        topk.streaming_heavy_hitters(events_stream(spark, landing)),
+        table=name,
     )
-    q.awaitTermination()
     return spark.sql(f"SELECT * FROM {name}")
 
 

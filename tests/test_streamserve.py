@@ -20,6 +20,7 @@ from bike_analyzer_spark.operators.streamserve import (
 )
 from bike_analyzer_spark.sources.catalog import load
 from bike_analyzer_spark.streaming import topk
+from bike_analyzer_spark.streaming.drain import drain
 from bike_analyzer_spark.streaming.joins import events_stream
 from bike_analyzer_spark.streaming.lateaudit import (
     run_late_audit_to_parquet,
@@ -126,15 +127,10 @@ def test_heavy_hitters_serve_matches_stream_no_eviction(spark, tdir):
     landing = os.path.join(tdir, "landing")
     ev.repartition(2).write.mode("overwrite").parquet(landing)
     name = f"hhserve_{uuid.uuid4().hex[:6]}"
-    q = (
-        topk.streaming_heavy_hitters(events_stream(spark, landing))
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        topk.streaming_heavy_hitters(events_stream(spark, landing)),
+        table=name,
     )
-    q.awaitTermination()
     got_stream = [
         (r.item, r.est, r.err)
         for r in topk.current_top_k(spark.sql(f"SELECT * FROM {name}")
@@ -191,15 +187,10 @@ def test_heavy_hitters_stream_bounds_under_eviction(spark, tdir):
     assert all(r["count"] > topk.CAPACITY for r in per_shard), per_shard
 
     name = f"hhevict_{uuid.uuid4().hex[:6]}"
-    q = (
-        topk.streaming_heavy_hitters(events_stream(spark, landing))
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        topk.streaming_heavy_hitters(events_stream(spark, landing)),
+        table=name,
     )
-    q.awaitTermination()
     served = topk.current_top_k(
         spark.sql(f"SELECT * FROM {name}"), k=10
     ).collect()
